@@ -1,16 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession
 
 /** Scratch: check cache substitution in the trainFold/scoreFold chain. */
 object DebugCache {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("debug-cache", cores = "8")
+      .config("spark.sql.shuffle.partitions", "8").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = "/root/testdata/sf0.01"
     graft.core.CacheScope.beginGate()

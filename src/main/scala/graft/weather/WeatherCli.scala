@@ -55,13 +55,22 @@ object WeatherCli {
 
   /** transform parity (transform.py:51-117,120-195): raw latest -> daily and
     * hourly tables, written as parquet (primary) and CSV (compat). Returns
-    * the daily frame. */
+    * the daily frame.
+    *
+    * The city's plan is built once: one merged hourly frame, and the daily
+    * table derived from it. A city is one payload (at most 16 days x 24 h
+    * = 384 hourly rows), so the plan runs in one partition and needs no
+    * `Exchange` (see [[WeatherTransform.mergeHourly]]). Both tables are
+    * materialised once with `localCheckpoint`, which leaves no cache handle
+    * to release, and each of the four sinks is then one job over them
+    * rather than a re-run of the raw scan, join, sorts and aggregate. */
   def transform(spark: SparkSession, cfg: Config): DataFrame = {
     val slug = WeatherSources.slug(cfg.city)
     val rawW = WeatherSources.readRaw(spark, s"${cfg.rawDir}/${slug}_weather.json")
     val rawA = WeatherSources.readRaw(spark, s"${cfg.rawDir}/${slug}_air.json")
-    val daily = WeatherTransform.withAlertFlags(WeatherTransform.daily(rawW, rawA))
-    val hourly = WeatherTransform.hourly(rawW, rawA)
+    val hourly = WeatherTransform.hourly(rawW, rawA).localCheckpoint()
+    val daily = WeatherTransform.withAlertFlags(
+      WeatherTransform.dailyOf(hourly, rawW)).localCheckpoint()
     WeatherSources.writeProcessed(daily, cfg.processedDir, s"${slug}_daily")
     WeatherSources.writeProcessed(hourly, cfg.processedDir, s"${slug}_hourly")
     WeatherSources.writeCsvCompat(daily, s"${cfg.processedDir}/${slug}_daily_csv")
@@ -73,7 +82,7 @@ object WeatherCli {
     * over the processed daily table -> HTML file. Returns the report path. */
   def report(spark: SparkSession, cfg: Config): Option[String] = {
     val slug = WeatherSources.slug(cfg.city)
-    val daily = spark.read.parquet(s"${cfg.processedDir}/${slug}_daily.parquet")
+    val daily = readProcessed(spark, cfg, "daily")
     WeatherReport.summary(daily).map { s =>
       val charts = WeatherViz.chartsToHtml(WeatherViz.vegaLiteSpecs(daily))
       Files.createDirectories(Paths.get(cfg.reportsDir))
@@ -84,26 +93,33 @@ object WeatherCli {
   }
 
   /** T1 — cache-or-compute: the /data/daily read path (web.py:344-353). */
-  def serveDaily(spark: SparkSession, cfg: Config, refresh: Boolean = false): DataFrame = {
-    val slug = WeatherSources.slug(cfg.city)
-    val processed = s"${cfg.processedDir}/${slug}_daily.parquet"
-    if (refresh || !Files.exists(Paths.get(processed))) {
-      fetch(cfg)
-      transform(spark, cfg)
-    }
-    spark.read.parquet(processed)
-  }
+  def serveDaily(spark: SparkSession, cfg: Config, refresh: Boolean = false): DataFrame =
+    serve(spark, cfg, "daily", refresh)
 
   /** T1 — the /data/hourly read path (web.py:356-363): same cache-or-compute
     * contract as [[serveDaily]] over the hourly processed table. */
-  def serveHourly(spark: SparkSession, cfg: Config, refresh: Boolean = false): DataFrame = {
-    val slug = WeatherSources.slug(cfg.city)
-    val processed = s"${cfg.processedDir}/${slug}_hourly.parquet"
-    if (refresh || !Files.exists(Paths.get(processed))) {
+  def serveHourly(spark: SparkSession, cfg: Config, refresh: Boolean = false): DataFrame =
+    serve(spark, cfg, "hourly", refresh)
+
+  /** Path of a city's processed `daily` or `hourly` parquet table. */
+  def processedPath(cfg: Config, table: String): String =
+    s"${cfg.processedDir}/${WeatherSources.slug(cfg.city)}_$table.parquet"
+
+  /** A processed table read with its declared schema, so the read infers
+    * nothing from the parquet footers (that would be a Spark job per read). */
+  def readProcessed(spark: SparkSession, cfg: Config, table: String): DataFrame = {
+    val schema = if (table == "daily") WeatherTransform.DailySchema
+      else WeatherTransform.HourlySchema
+    spark.read.schema(schema).parquet(processedPath(cfg, table))
+  }
+
+  private def serve(spark: SparkSession, cfg: Config, table: String,
+                    refresh: Boolean): DataFrame = {
+    if (refresh || !Files.exists(Paths.get(processedPath(cfg, table)))) {
       fetch(cfg)
       transform(spark, cfg)
     }
-    spark.read.parquet(processed)
+    readProcessed(spark, cfg, table)
   }
 
   /** S12 — JSON records payload {city, count, data} (web.py:376-377). The

@@ -2,7 +2,9 @@ package graft.weather
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.locks.{Lock, ReentrantReadWriteLock}
 
 import scala.util.{Failure, Try}
 
@@ -38,6 +40,11 @@ import graft.sources.{GeocodeSource, RegionSource}
   *
   * The per-request `collect`s are the serving boundary, not data-path
   * collects: each is one city's daily/hourly rows or a top-k row set.
+  *
+  * A city's processed tables are rewritten in place (`mode(Overwrite)`) by
+  * a refresh, so each city has a read/write lock: a read holds the read
+  * side through its `collect` (the frames are lazy), and a refresh or a
+  * cache-or-compute write holds the write side.
   */
 class WeatherServer(
     spark: SparkSession,
@@ -59,6 +66,34 @@ class WeatherServer(
         .withColumn("city", lit(city))
     }
   @volatile private var server: Option[HttpServer] = None
+  private val cityLocks = new ConcurrentHashMap[String, ReentrantReadWriteLock]()
+
+  /** Lock a city's processed tables for a read of `table`: the read side
+    * when the table exists and no refresh is asked for, else the write side
+    * (the read goes on to compute it). Existence is checked under the read
+    * lock, so no refresh can be deleting the table meanwhile. */
+  private def lockCity(city: String, table: String, refresh: Boolean): Lock = {
+    val rw = cityLocks.computeIfAbsent(WeatherSources.slug(city),
+      _ => new ReentrantReadWriteLock())
+    val read = rw.readLock()
+    read.lock()
+    if (!refresh && Files.exists(Paths.get(
+        WeatherCli.processedPath(cfg.copy(city = city), table)))) read
+    else {
+      read.unlock()
+      rw.writeLock().lock()
+      rw.writeLock()
+    }
+  }
+
+  /** Run `body` holding the locks of `cities`, taken in sorted order so two
+    * requests over overlapping cities cannot deadlock. */
+  private def withCities[T](cities: Seq[String], table: String, refresh: Boolean)(
+      body: => T): T = {
+    val held = cities.distinctBy(WeatherSources.slug).sortBy(WeatherSources.slug)
+      .map(lockCity(_, table, refresh))
+    try body finally held.reverse.foreach(_.unlock())
+  }
 
   // ---- endpoint payloads (pure JSON-string producers; HTTP-free, spec'd
   // directly in CliSpec and exercised over real HTTP in SourcesSpec) ----
@@ -80,13 +115,13 @@ class WeatherServer(
 
   /** /data/daily (web.py:366-377): T1 cache-or-compute + records payload. */
   def dailyJson(city: String, refresh: Boolean): String =
-    WeatherCli.recordsJson(
-      WeatherCli.serveDaily(spark, cfg.copy(city = city), refresh), city)
+    withCities(Seq(city), "daily", refresh)(WeatherCli.recordsJson(
+      WeatherCli.serveDaily(spark, cfg.copy(city = city), refresh), city))
 
   /** /data/hourly (web.py:380-394). */
   def hourlyJson(city: String, refresh: Boolean): String =
-    WeatherCli.recordsJson(
-      WeatherCli.serveHourly(spark, cfg.copy(city = city), refresh), city)
+    withCities(Seq(city), "hourly", refresh)(WeatherCli.recordsJson(
+      WeatherCli.serveHourly(spark, cfg.copy(city = city), refresh), city))
 
   /** /compare (web.py:512-570): per-city tolerant loads, >=2 requested
     * cities (400), >=2 successes (500 with per-city failures), flattened
@@ -97,9 +132,9 @@ class WeatherServer(
       throw HttpError(400, "Butuh minimal dua kota untuk perbandingan.")
     if (days < 1 || days > 16)
       throw HttpError(400, "days harus 1-16")
-    val loaded = cityList.map { city =>
+    val loaded = withCities(cityList, "daily", refresh = false)(cityList.map { city =>
       (city, Try(cityLoader(city, days)).flatMap(df => Try((df, df.toJSON.collect()))))
-    }
+    })
     val results = loaded.map {
       case (city, scala.util.Success((_, recs))) =>
         s"""{"name": ${jstr(city)}, "daily": [${recs.mkString(",")}], "error": null}"""

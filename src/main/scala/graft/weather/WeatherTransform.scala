@@ -30,9 +30,21 @@ object WeatherTransform {
 
   val AirRenames: Seq[(String, String)] = Seq("pm2_5" -> "pm25", "pm10" -> "pm10")
 
-  /** Minimal field sets used by the daily path (transform.py:67-70). */
-  val DailyWeatherFields: Seq[(String, String)] =
-    Seq("temperature_2m" -> "temp", "precipitation" -> "rain")
+  /** The processed hourly table as [[hourly]] writes it (FIXTURES.md §1.3).
+    * Readers of the processed zone declare it rather than infer it: parquet
+    * schema inference costs a Spark job on every read. */
+  val HourlySchema: StructType = StructType.fromDDL(
+    "time TIMESTAMP, temp DOUBLE, rain DOUBLE, rh DOUBLE, wind DOUBLE, " +
+      "feels_like DOUBLE, wcode DOUBLE, dew_point DOUBLE, wind_dir DOUBLE, " +
+      "pm25 DOUBLE, pm10 DOUBLE, date DATE")
+
+  /** The processed daily table: [[daily]] (FIXTURES.md §1.4 plus the sun
+    * times) with [[withAlertFlags]]. Declared for the same reason. */
+  val DailySchema: StructType = StructType.fromDDL(
+    "date DATE, temp_min DOUBLE, temp_max DOUBLE, total_rain DOUBLE, " +
+      "pm25_avg DOUBLE, pm10_avg DOUBLE, pm25_category STRING, sunrise STRING, " +
+      "sunset STRING, is_hot_day BOOLEAN, is_heavy_rain BOOLEAN, " +
+      "is_unhealthy_pm25 BOOLEAN")
 
   /** P1 — columnar->row pivot with per-field null padding
     * (transform.py:18-29): the `hourly.time` array is the spine; any field
@@ -71,9 +83,18 @@ object WeatherTransform {
 
   /** J1 + P6 + P7: full-outer merge of the weather and air hourly frames on
     * the raw time string, sorted by time (transform.py:77,169), numeric
-    * coercion, timestamp parse and date derivation. */
+    * coercion, timestamp parse and date derivation.
+    *
+    * One city's merge runs in one partition. Both sides come from a single
+    * payload (one multiLine JSON document, at most 16 days x 24 h = 384
+    * hourly rows at Open-Meteo's cap), so [[hourly]] hands them over
+    * coalesced to one partition, which satisfies the join's clustering
+    * without a shuffle. A full-outer join reports `UnknownPartitioning`,
+    * so its output is coalesced to one partition again: the time sort here
+    * and the daily group-by and date sort downstream then need no
+    * `Exchange` either. */
   def mergeHourly(weather: DataFrame, air: DataFrame, numericCols: Seq[String]): DataFrame = {
-    val merged = weather.join(air, Seq("time"), "full_outer")
+    val merged = weather.join(air, Seq("time"), "full_outer").coalesce(1)
     val coerced = numericCols.foldLeft(merged)((df, c) =>
       df.withColumn(c, col(c).cast("double")))
     coerced
@@ -114,17 +135,30 @@ object WeatherTransform {
     * Columns: date, temp_min, temp_max, total_rain, pm25_avg, pm10_avg,
     * pm25_category, plus nullable sunrise/sunset when the raw payload carries
     * the optional daily block (transform.py:51-117; golden values
-    * FIXTURES.md §1.5). */
-  def daily(rawWeather: DataFrame, rawAir: DataFrame): DataFrame = {
-    val hw = hourlyFrame(rawWeather, DailyWeatherFields)
-    val ha = hourlyFrame(rawAir, AirRenames)
-    val hourly = mergeHourly(hw, ha, Seq("temp", "rain", "pm25", "pm10"))
-    // sun-times frame is |days|-bounded (one payload per city) — broadcast;
-    // the left join keeps sunrise/sunset nullable end-to-end
-    dailyFromHourly(hourly)
-      .join(broadcast(sunTimes(rawWeather)), Seq("date"), "left_outer")
+    * FIXTURES.md §1.5).
+    *
+    * The reference builds its daily path from a second merge over only the
+    * temperature and rain fields (transform.py:67-70). Here it is derived
+    * from the one merged [[hourly]] table: the ragged-field guard nulls only
+    * the field it fails, and a row with an unparseable time has a null date,
+    * so the extra fields change no daily row. Like [[hourly]], the whole
+    * plan runs in one partition with no `Exchange`. */
+  def daily(rawWeather: DataFrame, rawAir: DataFrame): DataFrame =
+    dailyOf(hourly(rawWeather, rawAir), rawWeather)
+
+  /** One city's daily table from its merged hourly table: the A1 rollup,
+    * then the optional sun times. The hourly input is one payload's rows
+    * (see [[mergeHourly]]), coalesced to one partition so the group-by and
+    * the date sorts need no shuffle even when it arrives without
+    * `SinglePartition` (a checkpointed frame does not keep it). */
+  def dailyOf(hourly: DataFrame, rawWeather: DataFrame): DataFrame =
+    // the sun times are one payload's days (at most 16 rows) in one
+    // partition too, so a merge join needs no exchange and no job of its
+    // own, where a broadcast would collect them in a separate job; the
+    // left join keeps sunrise/sunset nullable end-to-end
+    dailyFromHourly(hourly.coalesce(1))
+      .join(sunTimes(rawWeather.coalesce(1)).hint("merge"), Seq("date"), "left_outer")
       .orderBy("date")
-  }
 
   /** A1/A3/A4/F2 over an hourly table: group by date; min/max temp, rain sum
     * (all-null group -> 0.0 like pandas sum + fillna, transform.py:103),
@@ -153,10 +187,11 @@ object WeatherTransform {
   /** transform.run_hourly parity: full 8-field weather block + air, merged,
     * coerced, rows with unparseable time dropped (transform.py:139-195).
     * Column order: time temp rain rh wind feels_like wcode dew_point wind_dir
-    * pm25 pm10 date. */
+    * pm25 pm10 date. Each raw frame is one payload, coalesced to one
+    * partition so the merge runs without a shuffle (see [[mergeHourly]]). */
   def hourly(rawWeather: DataFrame, rawAir: DataFrame): DataFrame = {
-    val hw = hourlyFrame(rawWeather, WeatherRenames)
-    val ha = hourlyFrame(rawAir, AirRenames)
+    val hw = hourlyFrame(rawWeather.coalesce(1), WeatherRenames)
+    val ha = hourlyFrame(rawAir.coalesce(1), AirRenames)
     val numeric = WeatherRenames.map(_._2) ++ AirRenames.map(_._2)
     mergeHourly(hw, ha, numeric)
       .filter(col("time").isNotNull) // transform.py:189

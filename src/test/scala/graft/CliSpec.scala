@@ -1,15 +1,19 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Config
 import graft.operators.SaltedJoin
-import graft.weather.WeatherCli
+import graft.weather.{WeatherCli, WeatherSources, WeatherTransform}
 
 class CliSpec extends SparkSpec {
   import spark.implicits._
+  import CliSpec._
 
   private def cfg() = {
     val dir = Files.createTempDirectory("graft-cli")
@@ -74,6 +78,52 @@ class CliSpec extends SparkSpec {
     assert(Files.getLastModifiedTime(parquet) == mtime)
     WeatherCli.serveDaily(spark, c, refresh = true) // forced recompute
     assert(Files.getLastModifiedTime(parquet) != mtime)
+  }
+
+  test("transform runs each city's plan once: at most 10 jobs for four sinks") {
+    val c = cfg()
+    WeatherCli.fetch(c)
+    // two raw scans, two checkpoints, four writes
+    val jobs = SparkSpec.launched(spark)(WeatherCli.transform(spark, c)).jobs
+    assert(jobs <= 10, s"$jobs jobs for one city's transform")
+  }
+
+  test("the processed tables have exactly the declared schemas") {
+    val c = cfg()
+    WeatherCli.fetch(c)
+    val daily = WeatherCli.transform(spark, c)
+    def shape(t: StructType) = t.fields.map(f => f.name -> f.dataType).toSeq
+    assert(shape(daily.schema) == shape(WeatherTransform.DailySchema))
+    // what parquet inference would find is what the serving reads declare
+    Seq("daily" -> WeatherTransform.DailySchema, "hourly" -> WeatherTransform.HourlySchema)
+      .foreach { case (table, schema) =>
+        assert(spark.read.parquet(WeatherCli.processedPath(c, table)).schema == schema, table)
+      }
+  }
+
+  test("transform writes one part file per sink; CSV bytes equal the goldens (FIXTURES §1.9)") {
+    val c0 = cfg()
+    val samples = Files.createDirectories(Paths.get(c0.samplesDir))
+    ShapePayloads.foreach { case (city, (weather, air)) =>
+      val slug = WeatherSources.slug(city)
+      Files.writeString(samples.resolve(s"${slug}_weather.json"), weather)
+      Files.writeString(samples.resolve(s"${slug}_air.json"), air)
+      val c = c0.copy(city = city)
+      WeatherCli.fetch(c)
+      WeatherCli.transform(spark, c)
+      def part(sink: String) = {
+        val parts = Files.list(Paths.get(c.processedDir, sink)).iterator().asScala
+          .map(_.getFileName.toString).filter(n => n.startsWith("part-") && !n.endsWith(".crc"))
+          .toSeq
+        assert(parts.size == 1, s"$sink: $parts")
+        Paths.get(c.processedDir, sink, parts.head)
+      }
+      part(s"${slug}_daily.parquet")
+      part(s"${slug}_hourly.parquet")
+      val (daily, hourly) = ShapeGoldens(city)
+      assert(Files.readString(part(s"${slug}_daily_csv")) == daily, city)
+      assert(Files.readString(part(s"${slug}_hourly_csv")) == hourly, city)
+    }
   }
 
   test("recordsJson emits the {city, count, data} payload (S12)") {
@@ -545,4 +595,93 @@ class CliSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(texts(outH) == texts(outP))
   }
+}
+
+object CliSpec {
+
+  private val Times = Seq("2025-03-01T00:00", "2025-03-01T12:00", "2025-03-02T06:00")
+  private val Weather = Seq(
+    "temperature_2m" -> "[24.5, 31.25, 22.0]", "precipitation" -> "[0.0, 1.25, 3.5]",
+    "relative_humidity_2m" -> "[88.0, 61.0, 93.0]", "windspeed_10m" -> "[3.2, 11.8, 0.0]",
+    "apparent_temperature" -> "[26.1, 35.4, 23.0]", "weathercode" -> "[1.0, 80.0, 61.0]",
+    "dew_point_2m" -> "[22.4, 22.9, 20.8]", "winddirection_10m" -> "[90.0, 225.0, 180.0]")
+  private val Air = Seq("pm2_5" -> "[12.0, 40.5, 8.25]", "pm10" -> "[20.0, 55.0, 15.5]")
+  private val Sun =
+    """"daily": {"time": ["2025-03-01", "2025-03-02"],
+      | "sunrise": ["2025-03-01T05:52", "2025-03-02T05:52"],
+      | "sunset": ["2025-03-01T18:03", "2025-03-02T18:02"]}""".stripMargin
+
+  private def payload(fields: Seq[(String, String)], extra: Option[String] = None): String = {
+    val hourly = ("time" -> Times.map("\"" + _ + "\"").mkString("[", ", ", "]")) +: fields
+    (s""""hourly": {${hourly.map { case (k, v) => s""""$k": $v""" }.mkString(", ")}}""" +:
+      extra.toSeq).mkString("{", ", ", "}")
+  }
+
+  private def replaced(fields: Seq[(String, String)], field: String, values: String) =
+    fields.map { case (k, v) => k -> (if (k == field) values else v) }
+
+  /** One two-day payload per FIXTURES §1.9 shape: a weather field missing, a
+    * ragged (short) weather field, a short `pm10`, complete, and complete
+    * with the optional daily sun block. */
+  val ShapePayloads: Seq[(String, (String, String))] = Seq(
+    "Kota Hilang" -> (payload(Weather.filterNot(_._1 == "windspeed_10m")), payload(Air)),
+    "Kota Rombeng" -> (payload(replaced(Weather, "precipitation", "[0.0, 1.25]")), payload(Air)),
+    "Kota Debu" -> (payload(Weather), payload(replaced(Air, "pm10", "[20.0]"))),
+    "Kota Lengkap" -> (payload(Weather), payload(Air)),
+    "Kota Surya" -> (payload(Weather, Some(Sun)), payload(Air)))
+
+  /** The daily and hourly CSV sinks of each shape, byte for byte, captured
+    * from the per-sink plans that preceded the one-partition transform: the
+    * processed zone must not change with the plan. */
+  val ShapeGoldens: Map[String, (String, String)] = Map(
+    "Kota Hilang" -> (
+      """date,temp_min,temp_max,total_rain,pm25_avg,pm10_avg,pm25_category,sunrise,sunset,is_hot_day,is_heavy_rain,is_unhealthy_pm25
+        |2025-03-01,24.5,31.25,1.25,26.25,37.5,Sedang,,,false,false,false
+        |2025-03-02,22.0,22.0,3.5,8.25,15.5,Baik,,,false,false,false
+        |""".stripMargin,
+      """time,temp,rain,rh,wind,feels_like,wcode,dew_point,wind_dir,pm25,pm10,date
+        |2025-03-01T00:00:00.000Z,24.5,0.0,88.0,,26.1,1.0,22.4,90.0,12.0,20.0,2025-03-01
+        |2025-03-01T12:00:00.000Z,31.25,1.25,61.0,,35.4,80.0,22.9,225.0,40.5,55.0,2025-03-01
+        |2025-03-02T06:00:00.000Z,22.0,3.5,93.0,,23.0,61.0,20.8,180.0,8.25,15.5,2025-03-02
+        |""".stripMargin),
+    "Kota Rombeng" -> (
+      """date,temp_min,temp_max,total_rain,pm25_avg,pm10_avg,pm25_category,sunrise,sunset,is_hot_day,is_heavy_rain,is_unhealthy_pm25
+        |2025-03-01,24.5,31.25,0.0,26.25,37.5,Sedang,,,false,false,false
+        |2025-03-02,22.0,22.0,0.0,8.25,15.5,Baik,,,false,false,false
+        |""".stripMargin,
+      """time,temp,rain,rh,wind,feels_like,wcode,dew_point,wind_dir,pm25,pm10,date
+        |2025-03-01T00:00:00.000Z,24.5,,88.0,3.2,26.1,1.0,22.4,90.0,12.0,20.0,2025-03-01
+        |2025-03-01T12:00:00.000Z,31.25,,61.0,11.8,35.4,80.0,22.9,225.0,40.5,55.0,2025-03-01
+        |2025-03-02T06:00:00.000Z,22.0,,93.0,0.0,23.0,61.0,20.8,180.0,8.25,15.5,2025-03-02
+        |""".stripMargin),
+    "Kota Debu" -> (
+      """date,temp_min,temp_max,total_rain,pm25_avg,pm10_avg,pm25_category,sunrise,sunset,is_hot_day,is_heavy_rain,is_unhealthy_pm25
+        |2025-03-01,24.5,31.25,1.25,26.25,,Sedang,,,false,false,false
+        |2025-03-02,22.0,22.0,3.5,8.25,,Baik,,,false,false,false
+        |""".stripMargin,
+      """time,temp,rain,rh,wind,feels_like,wcode,dew_point,wind_dir,pm25,pm10,date
+        |2025-03-01T00:00:00.000Z,24.5,0.0,88.0,3.2,26.1,1.0,22.4,90.0,12.0,,2025-03-01
+        |2025-03-01T12:00:00.000Z,31.25,1.25,61.0,11.8,35.4,80.0,22.9,225.0,40.5,,2025-03-01
+        |2025-03-02T06:00:00.000Z,22.0,3.5,93.0,0.0,23.0,61.0,20.8,180.0,8.25,,2025-03-02
+        |""".stripMargin),
+    "Kota Lengkap" -> (
+      """date,temp_min,temp_max,total_rain,pm25_avg,pm10_avg,pm25_category,sunrise,sunset,is_hot_day,is_heavy_rain,is_unhealthy_pm25
+        |2025-03-01,24.5,31.25,1.25,26.25,37.5,Sedang,,,false,false,false
+        |2025-03-02,22.0,22.0,3.5,8.25,15.5,Baik,,,false,false,false
+        |""".stripMargin,
+      """time,temp,rain,rh,wind,feels_like,wcode,dew_point,wind_dir,pm25,pm10,date
+        |2025-03-01T00:00:00.000Z,24.5,0.0,88.0,3.2,26.1,1.0,22.4,90.0,12.0,20.0,2025-03-01
+        |2025-03-01T12:00:00.000Z,31.25,1.25,61.0,11.8,35.4,80.0,22.9,225.0,40.5,55.0,2025-03-01
+        |2025-03-02T06:00:00.000Z,22.0,3.5,93.0,0.0,23.0,61.0,20.8,180.0,8.25,15.5,2025-03-02
+        |""".stripMargin),
+    "Kota Surya" -> (
+      """date,temp_min,temp_max,total_rain,pm25_avg,pm10_avg,pm25_category,sunrise,sunset,is_hot_day,is_heavy_rain,is_unhealthy_pm25
+        |2025-03-01,24.5,31.25,1.25,26.25,37.5,Sedang,2025-03-01T05:52,2025-03-01T18:03,false,false,false
+        |2025-03-02,22.0,22.0,3.5,8.25,15.5,Baik,2025-03-02T05:52,2025-03-02T18:02,false,false,false
+        |""".stripMargin,
+      """time,temp,rain,rh,wind,feels_like,wcode,dew_point,wind_dir,pm25,pm10,date
+        |2025-03-01T00:00:00.000Z,24.5,0.0,88.0,3.2,26.1,1.0,22.4,90.0,12.0,20.0,2025-03-01
+        |2025-03-01T12:00:00.000Z,31.25,1.25,61.0,11.8,35.4,80.0,22.9,225.0,40.5,55.0,2025-03-01
+        |2025-03-02T06:00:00.000Z,22.0,3.5,93.0,0.0,23.0,61.0,20.8,180.0,8.25,15.5,2025-03-02
+        |""".stripMargin))
 }

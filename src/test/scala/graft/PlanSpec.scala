@@ -1,18 +1,25 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Config, Tables}
 import graft.operators.Similarity
 import graft.queries.RelationalQueries
+import graft.weather.WeatherCli
 
 /** Physical-plan assertions: the properties that decide whether a query
   * still works at 1000x the data — pushdown reaching the parquet scan,
   * dimension joins broadcasting, bucketed ANN avoiding a cross join — are
   * pinned here so a refactor can't silently regress them.
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -43,6 +50,23 @@ class PlanSpec extends SparkSpec {
     val plan = planOf(
       Similarity.bucketedTopK(emb, emb.filter(col("vec_id") < 2), k = 3, bucketBits = 4))
     assert(!plan.contains("CartesianProduct"), s"bucketed ANN degenerated to cartesian:\n$plan")
+  }
+
+  test("a city's transform plans and sink writes need no shuffle exchange") {
+    val c = Config(dataDir = java.nio.file.Files.createTempDirectory("graft-plan").toString)
+    WeatherCli.fetch(c)
+    val plans = SparkSpec.launched(spark)(WeatherCli.transform(spark, c)).plans
+    def nodes(p: SparkPlan) = collectWithSubqueries(p) { case n => n }
+    // two checkpoints (the merge-and-sort hourly plan, the aggregate-and-sort
+    // daily plan) and the four sink writes over them
+    assert(plans.map(_._1).count(_ == "localCheckpoint") == 2, plans.map(_._1))
+    assert(plans.size == 6, plans.map(_._1))
+    val all = plans.flatMap { case (_, p) => nodes(p) }
+    assert(all.exists { case j: BaseJoinExec => j.joinType == FullOuter; case _ => false } &&
+      all.exists(_.isInstanceOf[HashAggregateExec]), "the city's plan was not inspected")
+    plans.foreach { case (action, p) =>
+      assert(!nodes(p).exists(_.isInstanceOf[ShuffleExchangeExec]), s"$action shuffles:\n$p")
+    }
   }
 
   test("daily rollup aggregates partially before the shuffle (A1)") {

@@ -35,7 +35,8 @@ class PropertySpec extends SparkSpec {
         val raw = WeatherSources.rawFromJson(spark,
           rawJson(n, Map("temperature_2m" -> lenTemp, "precipitation" -> lenRain)))
         val rows = WeatherTransform
-          .hourlyFrame(raw, WeatherTransform.DailyWeatherFields).collect()
+          .hourlyFrame(raw, Seq("temperature_2m" -> "temp", "precipitation" -> "rain"))
+          .collect()
         rows.length == n &&
           rows.forall(r => (r.getAs[String]("temp") != null) == (lenTemp == n)) &&
           rows.forall(r => (r.getAs[String]("rain") != null) == (lenRain == n))

@@ -3,6 +3,8 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.util.{Failure, Success}
 
@@ -56,6 +58,43 @@ class ServerSpec extends SparkSpec {
     assert(hourly.contains(""""pm25""""))
     val missing = intercept[HttpError](srv.route("/data/daily", Map.empty))
     assert(missing.status == 400)
+  }
+
+  test("reads racing a refresh of the same city all answer 200 with every row") {
+    val (srv, _) = newServer()
+    val port = srv.start()
+    val client = HttpClient.newHttpClient()
+    def get(path: String): HttpResponse[String] = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path")).build(),
+      HttpResponse.BodyHandlers.ofString())
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      assert(get("/data/daily?city=Bandung").statusCode() == 200)
+      val refreshing = new AtomicBoolean(true)
+      // three in-place rewrites of Bandung's processed tables...
+      val refreshes = pool.submit(() =>
+        try (1 to 3).map(_ => get("/data/daily?city=Bandung&refresh=true").statusCode())
+        finally refreshing.set(false))
+      // ...while three readers keep reading them: (status, right count, body)
+      val readers = (1 to 3).map { i =>
+        pool.submit(() => {
+          val (path, rows) = if (i % 2 == 0) ("/data/hourly?city=Bandung", 3)
+            else ("/data/daily?city=Bandung", 2)
+          Iterator.continually(get(path)).takeWhile(_ => refreshing.get())
+            .map(r => (r.statusCode(), r.body().contains(s""""count": $rows,"""), r.body()))
+            .toList
+        })
+      }
+      assert(refreshes.get(120, TimeUnit.SECONDS).forall(_ == 200))
+      val reads = readers.flatMap(_.get(120, TimeUnit.SECONDS))
+      assert(reads.nonEmpty)
+      reads.foreach { case (status, rightCount, body) =>
+        assert(status == 200 && rightCount, body.take(300))
+      }
+    } finally {
+      pool.shutdownNow()
+      srv.stop()
+    }
   }
 
   test("/compare: <2 cities 400; <2 successes 500; tolerant per-city errors") {

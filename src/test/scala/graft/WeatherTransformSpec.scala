@@ -69,7 +69,8 @@ class WeatherTransformSpec extends SparkSpec {
     val w = raw("""{"hourly": {"time": ["2025-01-01T00:00", "2025-01-01T01:00"],
       "temperature_2m": [20.0], "precipitation": [1.0, 2.0]}}""")
     val a = raw("""{"hourly": {"time": []}}""")
-    val hourly = WeatherTransform.hourlyFrame(w, WeatherTransform.DailyWeatherFields)
+    val hourly = WeatherTransform.hourlyFrame(w,
+      Seq("temperature_2m" -> "temp", "precipitation" -> "rain"))
     val rows = hourly.orderBy("time").collect()
     assert(rows.length == 2) // spine intact
     assert(rows.forall(_.isNullAt(1))) // ragged temp -> all null
