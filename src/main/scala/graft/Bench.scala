@@ -30,6 +30,35 @@ import org.apache.spark.sql.SparkSession
   *    query names run.
   */
 object Bench {
+
+  /** The round a run without `SPARK_GRAFT_ROUND` belongs to: the round in
+    * progress, one past the newest `BENCH_r{N}.json` record in `dir` (0
+    * when there is none). */
+  private[graft] def inferredRound(dir: java.nio.file.Path): Int = {
+    val prev = Option(dir.toFile.listFiles()).getOrElse(Array())
+      .flatMap(f => "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(f.getName)
+        .map(_.group(1).toInt))
+    if (prev.isEmpty) 0 else prev.max + 1
+  }
+
+  /** Where the self-record of a run at `round` on `cpus` cores goes.
+    *
+    * Only a run whose round was given explicitly (`SPARK_GRAFT_ROUND`)
+    * writes the canonical `bench_self_r{N}_c{cpus}.json`. A run that
+    * inferred its round writes `bench_self_r{N}_c{cpus}_local.json`: a local
+    * run after a round closes infers the NEXT round, and must not take the
+    * name that round's baseline will be written under. An existing file is
+    * never overwritten; later runs under the same name get a .2/.3/...
+    * suffix. */
+  private[graft] def selfRecordPath(dir: java.nio.file.Path, round: Int,
+                                    explicitRound: Boolean,
+                                    cpus: String): java.nio.file.Path = {
+    val base = s"bench_self_r${round}_c$cpus" + (if (explicitRound) "" else "_local")
+    Iterator.from(1)
+      .map(i => dir.resolve(if (i == 1) s"$base.json" else s"$base.$i.json"))
+      .find(p => !java.nio.file.Files.exists(p)).get
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -115,16 +144,11 @@ object Bench {
     // has truncated mid-stream before (r11 kept 72/128 timings), losing the
     // suite head for cross-round diffing. Write the complete record —
     // per-query medians IN SUITE ORDER, reps, and the session knobs — to a
-    // round-stamped file so every bench run survives lossless. The round is
-    // inferred from the newest driver artifact already in the repo (this
-    // run's results belong to the round IN PROGRESS = newest BENCH_r + 1);
-    // override with SPARK_GRAFT_ROUND when running outside the repo root.
-    val round = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt).getOrElse {
-      val prev = Option(new java.io.File(".").listFiles()).getOrElse(Array())
-        .flatMap(f => "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(f.getName)
-          .map(_.group(1).toInt))
-      if (prev.isEmpty) 0 else prev.max + 1
-    }
+    // round-stamped file so every bench run survives lossless (see
+    // [[selfRecordPath]] for the round and the file name).
+    val explicitRound = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt)
+    val here = java.nio.file.Paths.get(".")
+    val round = explicitRound.getOrElse(inferredRound(here))
     val self =
       s"""{"round":$round,"reps":$reps,"cpus":$cpus,
          |"suite_order":[${results.map("\"" + _._1 + "\"").mkString(",")}],
@@ -132,16 +156,7 @@ object Bench {
     // filtered local runs (SPARK_GRAFT_BENCH_ONLY) must not clobber the
     // full-suite record
     if (sys.env.get("SPARK_GRAFT_BENCH_ONLY").isEmpty) {
-      // r20 hygiene (VERDICT r19 item 8): the round inference made the
-      // driver's own post-round runs overwrite the builder's committed
-      // baseline twice (r18, r19). The artifact name now carries the core
-      // count, and an existing file is NEVER overwritten — later runs at
-      // the same (round, cpus) get a .2/.3/... suffix instead.
-      val base = s"bench_self_r${round}_c$cpus"
-      val out = Iterator.from(1)
-        .map(i => java.nio.file.Paths.get(
-          if (i == 1) s"$base.json" else s"$base.$i.json"))
-        .find(p => !java.nio.file.Files.exists(p)).get
+      val out = selfRecordPath(here, round, explicitRound.isDefined, cpus)
       java.nio.file.Files.write(out, self.getBytes("UTF-8"))
       System.err.println(s"[bench] wrote $out")
     }

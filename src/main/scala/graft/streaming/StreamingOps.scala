@@ -607,7 +607,8 @@ object StreamingOps {
               new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
             val dst = new org.apache.hadoop.fs.Path(s"$stateDir/labels")
             fs.delete(dst, true)
-            fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+            require(fs.rename(new org.apache.hadoop.fs.Path(tmp), dst),
+              s"labels rename into $dst failed")
             survivors.write.mode("append").parquet(s"$stateDir/docs")
           } finally survivors.unpersist()
         }

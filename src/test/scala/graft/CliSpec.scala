@@ -215,12 +215,60 @@ class CliSpec extends SparkSpec {
     assert(!salted.head.schema.fieldNames.contains("__salt"))
   }
 
+  private def sweepCache(): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
+  private def assertNoResidue(): Unit = {
+    assert(spark.sharedState.cacheManager.isEmpty, "curate left cached frames")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"curate left ${spark.sparkContext.getPersistentRDDs.size} persistent RDD(s)")
+  }
+
+  /** Run `curate` on a swept session and return its summary and the Spark
+    * jobs it launched; nothing it cached may outlive it. */
+  private def curated(curate: => CorpusCli.Summary): (CorpusCli.Summary, Int) = {
+    sweepCache()
+    var s: CorpusCli.Summary = null
+    val jobs = SparkSpec.launched(spark) { s = curate }.jobs
+    assertNoResidue()
+    (s, jobs)
+  }
+
+  /** A curate's outputs in the form the goldens pin. */
+  private def outputsOf(out: String): Delivered = {
+    def sha256(bytes: Array[Byte]) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(bytes).map("%02x".format(_)).mkString
+    val audit = spark.read.parquet(s"$out/audit").collect()
+      .map(r => (r.getLong(0), String.valueOf(r.get(1)), r.getString(2))).sortBy(_._1)
+      .map { case (id, source, verdict) => s"$id\t$source\t$verdict\n" }.mkString
+    val shards = Files.list(Paths.get(out, "corpus")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("shard=")).map { dir =>
+        val parts = Files.list(dir).iterator().asScala.toSeq.filter { p =>
+          val n = p.getFileName.toString
+          n.startsWith("part-") && !n.endsWith(".crc")
+        }
+        assert(parts.size == 1, s"$dir: $parts")
+        dir.getFileName.toString.stripPrefix("shard=").toInt -> sha256(Files.readAllBytes(parts.head))
+      }.toMap
+    val manifest = spark.read.parquet(s"$out/manifest").orderBy("shard").collect()
+      .map(_.toString).toSeq
+    Delivered(sha256(audit.getBytes("UTF-8")), shards, manifest)
+  }
+
   test("CorpusCli.curate delivers a validated sharded corpus with a full audit") {
     val out = Files.createTempDirectory("graft-corpus").toString
     val budget = 2000L
-    val s = CorpusCli.curate(spark, "/root/testdata/sf0.001", out,
-      shards = 4, budgetTokensPerSource = budget, minQuality = 0.4)
+    val (s, jobs) = curated(CorpusCli.curate(spark, "/root/testdata/sf0.001", out,
+      shards = 4, budgetTokensPerSource = budget, minQuality = 0.4))
+    // 56 when every sink re-ran the whole chain: without near-dup or decon
+    // stages the chain is a handful of small shuffles, so the gain here is
+    // the per-row text work run once, not the job count
+    assert(jobs <= 57, s"$jobs jobs for the default curate")
     assert(s.shardsOk, "manifest validation must pass on a fresh export")
+    // the audit, the shard bytes and the manifest equal the parent's
+    assert(outputsOf(out) == DefaultGolden)
     // the audit covers EVERY input document exactly once
     assert(s.byVerdict.values.sum == s.nDocs)
     val audit = spark.read.parquet(s"$out/audit")
@@ -253,10 +301,11 @@ class CliSpec extends SparkSpec {
     // records the codec + compressed bytes, and the read-back + full byte
     // validation (decompressed AND on-disk) still passes
     val outGz = Files.createTempDirectory("graft-corpus-gz").toString
-    val sGz = CorpusCli.curate(spark, "/root/testdata/sf0.001", outGz,
+    val (sGz, _) = curated(CorpusCli.curate(spark, "/root/testdata/sf0.001", outGz,
       shards = 4, budgetTokensPerSource = budget, minQuality = 0.4,
-      codec = Some("gzip"))
+      codec = Some("gzip")))
     assert(sGz.shardsOk && sGz.nKept == s.nKept)
+    assert(outputsOf(outGz) == GzipGolden)
     val mGz = spark.read.parquet(s"$outGz/manifest").collect()
     assert(mGz.forall(r => r.getAs[String]("codec") == "gzip" &&
       r.getAs[Long]("n_bytes_compressed") < r.getAs[Long]("n_bytes")))
@@ -282,6 +331,15 @@ class CliSpec extends SparkSpec {
     // screen in the default-config test above does drop docs). The spec's
     // point is the WIRING: the audit must carry no lang verdicts here.
     assert(!s.byVerdict.contains("lang"), s.byVerdict.toString)
+    // an export that throws (here on an unknown codec, after the verdicts
+    // are materialised and the audit written) still releases every cached
+    // frame, the trained router's token fold included
+    sweepCache()
+    intercept[IllegalArgumentException](CorpusCli.curate(spark,
+      "/root/testdata/sf0.001", Files.createTempDirectory("graft-corpus-tl-x").toString,
+      shards = 2, budgetTokensPerSource = 5000L, minQuality = 0.0,
+      trainedLangId = true, codec = Some("lz4")))
+    assertNoResidue()
   }
 
   test("CorpusCli --neardup and --decon-bench drop planted near-dups and benchmark leaks") {
@@ -303,6 +361,7 @@ class CliSpec extends SparkSpec {
     CorpusCli.curate(spark, inDir, out0,
       shards = 4, budgetTokensPerSource = 100000L, minQuality = 0.0,
       nearDup = true)
+    assert(outputsOf(out0) == NearDupGolden)
     val kept0 = spark.read.parquet(s"$out0/audit")
       .filter(col("verdict") === "kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -316,10 +375,13 @@ class CliSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
       .write.mode("overwrite").parquet(benchDir)
     val out = Files.createTempDirectory("graft-nd-out").toString
-    val s = CorpusCli.curate(spark, inDir, out,
+    val (s, jobs) = curated(CorpusCli.curate(spark, inDir, out,
       shards = 4, budgetTokensPerSource = 100000L, minQuality = 0.0,
-      nearDup = true, deconBenchDir = Some(benchDir))
+      nearDup = true, deconBenchDir = Some(benchDir)))
+    // 146 when every sink re-ran the whole chain, LSH and decon included
+    assert(jobs <= 100, s"$jobs jobs for the --neardup --decon-bench curate")
     assert(s.shardsOk && s.byVerdict.values.sum == s.nDocs)
+    assert(outputsOf(out) == NearDupDeconGolden)
     val audit = spark.read.parquet(s"$out/audit")
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     // a planted pair that passed the screens cannot BOTH survive near-dup
@@ -598,6 +660,45 @@ class CliSpec extends SparkSpec {
 }
 
 object CliSpec {
+
+  /** What one curate delivered: the SHA-256 of its audit rows sorted by
+    * doc_id (one `doc_id<TAB>source<TAB>verdict` line each), the SHA-256 of
+    * each shard's part file, and the manifest rows. */
+  final case class Delivered(audit: String, shards: Map[Int, String], manifest: Seq[String])
+
+  /** The goldens, captured from the chain-per-sink curate that preceded the
+    * two materialisations: the outputs must not change with the plan. */
+  val DefaultGolden = Delivered(
+    "d89131b5905e5b5d4d96b5244733f1b7842b31d8d8606805a8a003510ed79b10",
+    Map(0 -> "c038666f07abb46904d4294b36db3ef5ebf2b6940fff1c1ba3f1c925905b23f4",
+      1 -> "5405840c49858444ebb8924992f9b6a0ed35929cb9120ac40bfe512145f46483",
+      2 -> "2655ef3e1fec72c614eb717059df6e438ec4df65844d413be65bd11c4fa2a942",
+      3 -> "4364bca940bac86508476ef50a403d9d68c95396a9b28ab7ba7006664539741c"),
+    Seq("[0,93,36724,none,36724]", "[1,95,39565,none,39565]",
+      "[2,114,45428,none,45428]", "[3,90,37501,none,37501]"))
+  val GzipGolden = Delivered(
+    DefaultGolden.audit,
+    Map(0 -> "f9b085e2f9f540d29e6bed79fa6553ca4394442590daa1b2192227b33349061c",
+      1 -> "12dc93f7dd4608339013c89b80e5f2b10e9c2f2f5eb19343fc1d7f70803a3797",
+      2 -> "db619fe95de587d201d00b7adaa75621812b5e1da8a687e42727ee6169d605e4",
+      3 -> "7c5c4cd223b761a2288805b950104fed3fdce0336ee6ce754fed55ab707803e3"),
+    Seq("[0,93,36724,gzip,7432]", "[1,95,39565,gzip,7817]",
+      "[2,114,45428,gzip,9038]", "[3,90,37501,gzip,7623]"))
+  val NearDupGolden = Delivered(
+    "6486212d940b0205f5e579c106a8e317669772ff93bee0311b15200e8332de40",
+    Map(0 -> "fb1c8e14d5a4cf1b42028f07ca8545acf268d189b33ba839d0d6868060f088f7",
+      1 -> "418000dd61728b30009971e2d142a6b4a546bd2376f602dbcf32d46e081ab0ec",
+      2 -> "009cfb3148aeba63c7ca45ba03bbb7f36f60753df148fac9f8cded5c584af969",
+      3 -> "efaababa3fd75f71ca8ae6f772430abb1aac68d1912640aaf17e737ccfd2c2cd"),
+    Seq("[0,2,294,none,294]", "[1,2,254,none,254]", "[2,6,983,none,983]",
+      "[3,1,133,none,133]"))
+  // the three benchmark docs leave shard 0 empty, so it has no directory
+  val NearDupDeconGolden = Delivered(
+    "eb0f3e80566368029b01f865e9ada8611f01287a3e973034d18540b374a1bd35",
+    Map(1 -> "418000dd61728b30009971e2d142a6b4a546bd2376f602dbcf32d46e081ab0ec",
+      2 -> "366642710f3f2c6131d7dab68a43e213459efa154f1f1042892bb49749dd7824",
+      3 -> "efaababa3fd75f71ca8ae6f772430abb1aac68d1912640aaf17e737ccfd2c2cd"),
+    Seq("[1,2,254,none,254]", "[2,5,788,none,788]", "[3,1,133,none,133]"))
 
   private val Times = Seq("2025-03-01T00:00", "2025-03-01T12:00", "2025-03-02T06:00")
   private val Weather = Seq(
