@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.collection.mutable
+
+import graft.core.GraftSession
+import graft.queries.Q
 
 /** Benchmark main: runs the full query inventory against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -16,11 +20,17 @@ import org.apache.spark.sql.SparkSession
   * rebuilt — each timed run re-executes all real work, it only skips the
   * compile-time fixed costs.
   *
-  * Cache hygiene: after each query's runs the cache is cleared AND any RDD
-  * still registered in `sc.getPersistentRDDs` is unpersisted (ml internals
-  * can persist at the RDD layer, which `catalog.clearCache` does not cover).
-  * Leftovers are reported to stderr — a gate must not leak cache into its
-  * neighbors' timings (or their memory budget).
+  * Cache hygiene: before each timed run and after each query's runs,
+  * [[GateRunner.sweep]] clears the cache and unpersists any RDD-level
+  * leftover. Leftovers are reported to stderr — a gate must not leak cache
+  * into its neighbors' timings (or their memory budget).
+  *
+  * Failures: a run that throws is reported to stderr
+  * (`[bench] <name> failed: ...`) and its gate is still timed up to the
+  * throw, so the stdout line keeps one number per gate. Those numbers are
+  * not timings of the gate's work: the self-record lists every gate with a
+  * failed run (warm or timed) by name in `"failed":[...]`, in suite order,
+  * empty when every run succeeded.
   *
   * Local-iteration knobs (the driver sets none of these):
   *  - SPARK_GRAFT_REPS: timed runs per query (median reported)
@@ -67,41 +77,23 @@ object Bench {
     // is already JIT-hot from prior gates; SOLO runs on a fresh JVM need ~3
     // to stop measuring HotSpot compilation instead of the plan.
     val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1").toInt.max(1)
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(pats) => name => pats.split(',').exists(name.contains)
-      case None => _ => true
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    val only = GateRunner.selects(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val spark = GraftSession.local("graft-bench", cpus, cpus)
+    GateRunner.noop(SparkEntry.entry(spark))
     def sweepCache(name: String): Unit = {
-      spark.catalog.clearCache()
-      val leftover = spark.sparkContext.getPersistentRDDs
-      if (leftover.nonEmpty) {
+      val leftover = GateRunner.sweep(spark)
+      if (leftover.nonEmpty)
         System.err.println(s"[bench] $name leaked ${leftover.size} RDD-level " +
-          s"persist(s): ${leftover.values.map(_.name).mkString(", ")}")
-        leftover.values.foreach(_.unpersist(blocking = false))
-      }
+          s"persist(s): ${leftover.mkString(", ")}")
     }
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // gate-scoped persists release INSIDE the timed region: production
-      // pays the unpersist too, and the next run's sweep then has nothing
-      // gate-owned left to find
-      graft.core.CacheScope.beginGate()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+    val failed = mutable.LinkedHashSet.empty[String]
+    def once(name: String, q: Q): Double = {
+      val run = GateRunner.run(spark, q, sfDir)(GateRunner.noop)
+      run.failure.foreach { e =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
       }
-      finally graft.core.CacheScope.endGate()
-      (System.nanoTime() - t0) / 1e9
+      run.seconds
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -122,12 +114,12 @@ object Bench {
       // so a timed run measures the operator, not index (re)construction.
       def prewarm(): Unit = q.prewarm.foreach(f => f(spark, sfDir))
       (1 to warmups).foreach { _ =>  // warm: codegen + JIT + classloading
-        prewarm(); once(name, q.fn); sweepCache(name)
+        prewarm(); once(name, q); sweepCache(name)
       }
       val timed = (1 to reps).map { _ =>
         sweepCache(name) // drop persisted intermediates -> timed run redoes all real work
         prewarm()        // ...except the shared assets the gate only probes
-        once(name, q.fn)
+        once(name, q)
       }
       sweepCache(name)   // leave nothing cached for the next query
       if (reps > 1) System.err.println(
@@ -152,6 +144,7 @@ object Bench {
     val self =
       s"""{"round":$round,"reps":$reps,"cpus":$cpus,
          |"suite_order":[${results.map("\"" + _._1 + "\"").mkString(",")}],
+         |"failed":[${failed.map("\"" + _ + "\"").mkString(",")}],
          |${line.drop(1)}""".stripMargin.replace("\n", "")
     // filtered local runs (SPARK_GRAFT_BENCH_ONLY) must not clobber the
     // full-suite record

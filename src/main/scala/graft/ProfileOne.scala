@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
-/** Scratch: per-job / per-stage breakdown for one inventory query — the
+import graft.core.GraftSession
+
+/** Per-job / per-stage breakdown for one inventory query — the
   * empirical half of the optimization loop (guide §1.1) where the UI is
   * unavailable. Runs the gate exactly as Bench does (prewarm outside the
   * timed region, noop sink, warm run first) and prints, for the timed run:
@@ -19,15 +20,7 @@ object ProfileOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-profile", cpus, cpus)
 
     case class JobRec(id: Int, desc: String, start: Long, var end: Long = 0L,
                       stages: mutable.ArrayBuffer[Int] = mutable.ArrayBuffer())
@@ -76,20 +69,13 @@ object ProfileOne {
 
     val q = SparkEntry.inventory.toMap.apply(name)
     def once(): Double = {
-      graft.core.CacheScope.beginGate()
-      val t0 = System.nanoTime()
-      try q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      finally graft.core.CacheScope.endGate()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      val run = GateRunner.run(spark, q, sfDir)(GateRunner.noop)
+      run.failure.foreach(e => throw e)
+      run.seconds
     }
     def prewarm(): Unit = q.prewarm.foreach(f => f(spark, sfDir))
     // two warm runs (fresh JVM): codegen + JIT
-    (1 to 2).foreach { _ => prewarm(); once(); sweep() }
+    (1 to 2).foreach { _ => prewarm(); once(); GateRunner.sweep(spark) }
     System.gc()
     prewarm()
     record = true

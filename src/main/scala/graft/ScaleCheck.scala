@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.functions.TextFunctions
 import graft.operators.Dedup
 
@@ -17,18 +17,7 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val base = "/root/testdata/sf0.1"
     val out = "/tmp/scale10"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match the bench/verify harness config (ANSI off) — the point is to
-      // measure the same plans the gates run (the operators themselves are
-      // ANSI-safe; the components checksum found that out the hard way)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale", "32", "32")
 
     def replicate(name: String, idCols: Seq[String], shards: Int): Unit = {
       val src = spark.read.parquet(s"$base/$name.parquet")

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.core.GraftSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,60 +10,34 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated substrings — run only matching
     // queries (local iteration; the driver always passes 2 args = run all)
-    val only: String => Boolean = args.drop(2).headOption match {
-      case Some(pats) => name => pats.split(',').exists(name.contains)
-      case None => _ => true
-    }
+    val only = GateRunner.selects(args.drop(2).headOption)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify", cpus, cpus)
     new java.io.File(outDir).mkdirs()
     var releasedTotal = 0
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only(name)) {
-        // per-gate cache scope: gate-internal persists (token folds, band
-        // indexes) pin into this handle and are RELEASED as soon as the
-        // gate's output is materialized — a 300-gate sweep holds at most
-        // one gate's intermediates at a time, by construction rather than
-        // by blanket sweep.
-        graft.core.CacheScope.beginGate()
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        finally releasedTotal += graft.core.CacheScope.endGate()
-        // cache hygiene between gates. Remaining DataFrame-level persists
-        // after the handle release are the SESSION-SHARED assets (the
-        // memoized Similarity.sharedIvf index) — swept here and they
-        // repair themselves on next use. RDD-level persists have no such
-        // owner and would pin memory for the rest of the run, so they are
-        // STRICT by default: a gate that leaks one is recorded as FAILED
-        // (its dump is deleted, so the driver's compare reports it) and
-        // the discipline can't erode silently; SPARK_GRAFT_LENIENT_CACHE=1
-        // restores warn-and-clean for local archaeology.
-        spark.catalog.clearCache()
-        val leftover = spark.sparkContext.getPersistentRDDs
-        if (leftover.nonEmpty) {
-          val what = leftover.values.map(_.name).mkString(", ")
-          leftover.values.foreach(_.unpersist(blocking = false))
-          if (sys.env.get("SPARK_GRAFT_LENIENT_CACHE").contains("1"))
-            System.err.println(s"[verify] $name leaked ${leftover.size} " +
-              s"RDD-level persist(s): $what")
-          else {
-            System.err.println(s"[verify] $name failed: leaked " +
-              s"${leftover.size} RDD-level persist(s): $what")
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(s"$outDir/$name"))
-          }
-        }
+    SparkEntry.inventory.filter(kv => only(kv._1)).foreach { case (name, q) =>
+      // per-gate cache scope: gate-internal persists (token folds, band
+      // indexes) are RELEASED as soon as the gate's output is written — a
+      // 300-gate sweep holds at most one gate's intermediates at a time, by
+      // construction rather than by blanket sweep.
+      val run = GateRunner.run(spark, q, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      run.failure.foreach(e =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}"))
+      releasedTotal += run.released
+      // Remaining DataFrame-level persists are the SESSION-SHARED assets
+      // (the memoized Similarity.sharedIvf index) — swept here and they
+      // repair themselves on next use. RDD-level persists have no such
+      // owner and would pin memory for the rest of the run, so a gate that
+      // leaks one is recorded as FAILED (its dump is deleted, so the
+      // oracle compare reports it) and the discipline can't erode
+      // silently.
+      val leaked = GateRunner.sweep(spark)
+      if (leaked.nonEmpty) {
+        System.err.println(s"[verify] $name failed: leaked " +
+          s"${leaked.size} RDD-level persist(s): ${leaked.mkString(", ")}")
+        org.apache.commons.io.FileUtils.deleteQuietly(
+          new java.io.File(s"$outDir/$name"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -81,8 +57,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // end-of-sweep residue assertion: every gate handle was released and
     // every sweep ran, so nothing may still be pinned at either layer
-    spark.catalog.clearCache()
-    require(spark.sparkContext.getPersistentRDDs.isEmpty,
+    require(GateRunner.sweep(spark).isEmpty,
       "verify sweep finished with persisted RDDs still registered — a " +
         "gate's persist escaped both its handle and the sweep")
     System.err.println(

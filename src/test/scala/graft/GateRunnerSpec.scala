@@ -1,0 +1,78 @@
+package graft
+
+import graft.core.CacheScope
+import graft.queries.Q
+
+/** The gate runner's contract, on fake gates: a throw comes back as a
+  * failure with the gate's scope still released, an RDD-level leak is
+  * named by the sweep and removed, and a clean gate reports its seconds and
+  * the persists it released. */
+class GateRunnerSpec extends SparkSpec {
+
+  private def persistentCount: Int = spark.sparkContext.getPersistentRDDs.size
+
+  private def gate(body: => org.apache.spark.sql.DataFrame): Q = Q((_, _) => body)
+
+  /** A gate-scoped persist, materialized so its RDD is registered. */
+  private def pinned(n: Long) = {
+    val df = CacheScope.gatePersist(spark.range(n).toDF("id"))
+    df.count()
+    df
+  }
+
+  test("a throwing gate is a failure and its scope is still released") {
+    GateRunner.sweep(spark)
+    val run = GateRunner.run(spark, gate {
+      pinned(10)
+      throw new IllegalStateException("boom")
+    }, "unused")(GateRunner.noop)
+    assert(run.failure.map(_.getMessage).contains("boom"))
+    assert(run.released == 1)
+    assert(persistentCount == 0)
+    assert(GateRunner.sweep(spark).isEmpty)
+  }
+
+  test("a throw from the sink is a failure too") {
+    GateRunner.sweep(spark)
+    val run = GateRunner.run(spark, gate(pinned(5)), "unused")(
+      _ => throw new RuntimeException("sink"))
+    assert(run.failure.map(_.getMessage).contains("sink"))
+    assert(run.released == 1)
+    assert(persistentCount == 0)
+  }
+
+  test("sweep names an RDD persisted outside gatePersist and removes it") {
+    GateRunner.sweep(spark)
+    val run = GateRunner.run(spark, gate {
+      val rdd = spark.sparkContext.parallelize(1 to 3).setName("leaky-rdd").cache()
+      rdd.count()
+      spark.range(3).toDF("id")
+    }, "unused")(GateRunner.noop)
+    assert(run.failure.isEmpty)
+    assert(run.released == 0)
+    assert(persistentCount == 1)
+    assert(GateRunner.sweep(spark) == Seq("leaky-rdd"))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("a clean gate returns its seconds and the persists it released") {
+    GateRunner.sweep(spark)
+    var rows = 0L
+    val run = GateRunner.run(spark, gate {
+      pinned(20).join(pinned(30), "id")
+    }, "unused")(df => rows = df.count())
+    assert(run.failure.isEmpty)
+    assert(rows == 20)
+    assert(run.seconds > 0)
+    assert(run.released == 2)
+    assert(GateRunner.sweep(spark).isEmpty)
+  }
+
+  test("the gate selection matches any comma-separated substring") {
+    val only = GateRunner.selects(Some("q_text,_daily"))
+    assert(only("q_text_spans_within"))
+    assert(only("q_weather_daily"))
+    assert(!only("q_a9_ranked_summary"))
+    assert(GateRunner.selects(None)("q_a9_ranked_summary"))
+  }
+}

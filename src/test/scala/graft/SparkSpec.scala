@@ -11,20 +11,13 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.GraftSession
+
 /** Shared local session for all suites (one JVM-wide session keeps the
   * battery fast; suites must not mutate session state). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft-test")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.local("graft-test", cores = "4", partitions = "4")
     // the engine's native expressions (slugify, hamming64, vec_*) are part
     // of the surface under test — register once for every suite
     GraftExtensions.register(s)
