@@ -1,9 +1,6 @@
 package graft
 
-import scala.collection.mutable
-
 import graft.core.GraftSession
-import graft.queries.Q
 
 /** Benchmark main: runs the full query inventory against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -20,10 +17,11 @@ import graft.queries.Q
   * rebuilt — each timed run re-executes all real work, it only skips the
   * compile-time fixed costs.
   *
-  * Cache hygiene: before each timed run and after each query's runs,
-  * [[GateRunner.sweep]] clears the cache and unpersists any RDD-level
-  * leftover. Leftovers are reported to stderr — a gate must not leak cache
-  * into its neighbors' timings (or their memory budget).
+  * The per-gate sequence (full GC, prewarm outside the timed region, warm
+  * runs, timed runs, a sweep between runs) is [[GateRunner.measure]], the
+  * one [[ScaleCheck]] runs too. Its sweeps unpersist any RDD-level
+  * leftover and report it to stderr — a gate must not leak cache into its
+  * neighbors' timings (or their memory budget).
   *
   * Failures: a run that throws is reported to stderr
   * (`[bench] <name> failed: ...`) and its gate is still timed up to the
@@ -80,52 +78,15 @@ object Bench {
     val only = GateRunner.selects(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = GraftSession.local("graft-bench", cpus, cpus)
     GateRunner.noop(SparkEntry.entry(spark))
-    def sweepCache(name: String): Unit = {
-      val leftover = GateRunner.sweep(spark)
-      if (leftover.nonEmpty)
-        System.err.println(s"[bench] $name leaked ${leftover.size} RDD-level " +
-          s"persist(s): ${leftover.mkString(", ")}")
-    }
-    val failed = mutable.LinkedHashSet.empty[String]
-    def once(name: String, q: Q): Double = {
-      val run = GateRunner.run(spark, q, sfDir)(GateRunner.noop)
-      run.failure.foreach { e =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failed += name
-      }
-      run.seconds
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     val suite = SparkEntry.inventory.filter(kv => only(kv._1))
-    val results = suite.map { case (name, q) =>
-      // Per-GATE full GC on top of the cache sweep: heap residue from prior
-      // gates (old-gen churn, codegen caches) was measured inflating
-      // timings 2.6–4.5x on untouched code at suite positions past ~150
-      // gates (VERDICT r12), and per-FAMILY GC still left 2–8x per-gate
-      // divergence between the driver's 256-gate suite run and quiet-box
-      // solo runs (VERDICT r14). GC runs before t0, so it costs wall-clock,
-      // not timings (~0.1–0.5 s x 256 gates on this heap).
-      System.gc()
-      // Session-shared assets (IVF index, semantic labeling) rebuild
-      // OUTSIDE the timed region: production builds them once at ingest,
-      // so a timed run measures the operator, not index (re)construction.
-      def prewarm(): Unit = q.prewarm.foreach(f => f(spark, sfDir))
-      (1 to warmups).foreach { _ =>  // warm: codegen + JIT + classloading
-        prewarm(); once(name, q); sweepCache(name)
-      }
-      val timed = (1 to reps).map { _ =>
-        sweepCache(name) // drop persisted intermediates -> timed run redoes all real work
-        prewarm()        // ...except the shared assets the gate only probes
-        once(name, q)
-      }
-      sweepCache(name)   // leave nothing cached for the next query
+    val timings = suite.map { case (name, q) =>
+      val t = GateRunner.measure(spark, name, q, sfDir, "bench", warmups, reps)
       if (reps > 1) System.err.println(
-        f"[bench] $name reps: ${timed.map(t => f"$t%.3f").mkString(" ")}")
-      name -> median(timed)
+        f"[bench] $name reps: ${t.seconds.map(s => f"$s%.3f").mkString(" ")}")
+      name -> t
     }
+    val results = timings.map { case (name, t) => name -> t.median }
+    val failed = timings.collect { case (name, t) if t.failures.nonEmpty => name }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum

@@ -68,6 +68,27 @@ class GateRunnerSpec extends SparkSpec {
     assert(GateRunner.sweep(spark).isEmpty)
   }
 
+  test("measure keeps the prewarm out of the timed seconds") {
+    GateRunner.sweep(spark)
+    var prewarms = 0
+    val sleepy = Q((s, _) => s.range(1).toDF("id"),
+      prewarm = Some((_, _) => { prewarms += 1; Thread.sleep(300) }))
+    val t = GateRunner.measure(spark, "sleepy", sleepy, "unused", "spec")
+    assert(prewarms == 2) // before the warm run and before the timed run
+    assert(t.failures.isEmpty)
+    assert(t.seconds.size == 1)
+    assert(t.median < 0.3)
+  }
+
+  test("measure records a throwing prewarm or run as a failure") {
+    val bad = Q((_, _) => throw new IllegalStateException("run"),
+      prewarm = Some((_, _) => throw new IllegalStateException("prewarm")))
+    val t = GateRunner.measure(spark, "bad", bad, "unused", "spec", warmups = 1, reps = 2)
+    assert(t.seconds.size == 2)
+    assert(t.failures.map(_.getMessage) == Seq.fill(3)(Seq("prewarm", "run")).flatten)
+    assert(GateRunner.sweep(spark).isEmpty)
+  }
+
   test("the gate selection matches any comma-separated substring") {
     val only = GateRunner.selects(Some("q_text,_daily"))
     assert(only("q_text_spans_within"))
