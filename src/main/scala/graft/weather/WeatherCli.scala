@@ -1,8 +1,11 @@
 package graft.weather
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.locks.ReentrantLock
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -14,9 +17,19 @@ import graft.sources.{GeocodeSource, Ingest}
   * the snapshot+latest dual-write; `transform` materializes the processed
   * zone (parquet primary, CSV compat); `report` renders the summary HTML.
   *
-  * `serveDaily` is the web layer's cache-or-compute read path (T1,
+  * `records` is the web layer's cache-or-compute read path (T1,
   * web.py:344-363): serve the materialized processed zone if present, else
   * run the pipeline first; `refresh=true` always re-runs.
+  *
+  * Every `transform` publishes the JSON records of the two tables it wrote
+  * into one JVM-wide snapshot map, keyed by the table's normalised absolute
+  * parquet path and stamped with its `_SUCCESS` file (file key + mtime).
+  * The map holds one entry per processed table path, and an entry is one
+  * city's rows: at most 16 days x 24 h = 384 hourly records and 16 daily
+  * ones. The records are `toJSON` of the frames the sinks were written
+  * from, which equal `toJSON` of the written parquet only because
+  * `GraftSession` pins the session time zone to UTC (timestamps render the
+  * same on both sides).
   */
 object WeatherCli {
 
@@ -63,18 +76,25 @@ object WeatherCli {
     * `Exchange` (see [[WeatherTransform.mergeHourly]]). Both tables are
     * materialised once with `localCheckpoint`, which leaves no cache handle
     * to release, and each of the four sinks is then one job over them
-    * rather than a re-run of the raw scan, join, sorts and aggregate. */
+    * rather than a re-run of the raw scan, join, sorts and aggregate. The
+    * actions that materialise the two checkpoints are the `toJSON` collects
+    * whose records are published, after the writes, as the snapshot
+    * [[records]] serves. */
   def transform(spark: SparkSession, cfg: Config): DataFrame = {
     val slug = WeatherSources.slug(cfg.city)
     val rawW = WeatherSources.readRaw(spark, s"${cfg.rawDir}/${slug}_weather.json")
     val rawA = WeatherSources.readRaw(spark, s"${cfg.rawDir}/${slug}_air.json")
-    val hourly = WeatherTransform.hourly(rawW, rawA).localCheckpoint()
+    val hourly = WeatherTransform.hourly(rawW, rawA).localCheckpoint(eager = false)
+    val hourlyRows = hourly.toJSON.collect().toIndexedSeq
     val daily = WeatherTransform.withAlertFlags(
-      WeatherTransform.dailyOf(hourly, rawW)).localCheckpoint()
+      WeatherTransform.dailyOf(hourly, rawW)).localCheckpoint(eager = false)
+    val dailyRows = daily.toJSON.collect().toIndexedSeq
     WeatherSources.writeProcessed(daily, cfg.processedDir, s"${slug}_daily")
     WeatherSources.writeProcessed(hourly, cfg.processedDir, s"${slug}_hourly")
     WeatherSources.writeCsvCompat(daily, s"${cfg.processedDir}/${slug}_daily_csv")
     WeatherSources.writeCsvCompat(hourly, s"${cfg.processedDir}/${slug}_hourly_csv")
+    publish(processedPath(cfg, "daily"), dailyRows)
+    publish(processedPath(cfg, "hourly"), hourlyRows)
     daily
   }
 
@@ -92,15 +112,6 @@ object WeatherCli {
     }
   }
 
-  /** T1 — cache-or-compute: the /data/daily read path (web.py:344-353). */
-  def serveDaily(spark: SparkSession, cfg: Config, refresh: Boolean = false): DataFrame =
-    serve(spark, cfg, "daily", refresh)
-
-  /** T1 — the /data/hourly read path (web.py:356-363): same cache-or-compute
-    * contract as [[serveDaily]] over the hourly processed table. */
-  def serveHourly(spark: SparkSession, cfg: Config, refresh: Boolean = false): DataFrame =
-    serve(spark, cfg, "hourly", refresh)
-
   /** Path of a city's processed `daily` or `hourly` parquet table. */
   def processedPath(cfg: Config, table: String): String =
     s"${cfg.processedDir}/${WeatherSources.slug(cfg.city)}_$table.parquet"
@@ -113,22 +124,69 @@ object WeatherCli {
     spark.read.schema(schema).parquet(processedPath(cfg, table))
   }
 
-  private def serve(spark: SparkSession, cfg: Config, table: String,
-                    refresh: Boolean): DataFrame = {
-    if (refresh || !Files.exists(Paths.get(processedPath(cfg, table)))) {
-      fetch(cfg)
-      transform(spark, cfg)
+  /** T1 — cache-or-compute (web.py:344-363): a city's processed `daily` or
+    * `hourly` rows as JSON records, the /data/daily and /data/hourly read
+    * path.
+    *
+    * A hit stats the table's `_SUCCESS` and, when its stamp is the
+    * snapshot's, returns the snapshot's rows: no lock, no Spark job, no file
+    * read. Anything else (no snapshot, a table rewritten by another process,
+    * `_SUCCESS` missing mid-rewrite, `refresh`) takes the city's
+    * single-flight lock and checks again; then it either computes (fetch →
+    * [[transform]], which publishes) when asked to refresh or when the
+    * table does not exist, or loads the written table, publishing the rows
+    * only if the stamp did not move while they were read. */
+  def records(spark: SparkSession, cfg: Config, table: String,
+              refresh: Boolean = false): IndexedSeq[String] = {
+    val path = processedPath(cfg, table)
+    val key = normalised(path)
+    def current: Option[IndexedSeq[String]] = Option(snapshots.get(key))
+      .filter(snap => stamp(path).contains(snap.stamp)).map(_.rows)
+    (if (refresh) None else current).getOrElse {
+      val lock = cityLocks.computeIfAbsent(
+        normalised(s"${cfg.processedDir}/${WeatherSources.slug(cfg.city)}"),
+        _ => new ReentrantLock())
+      lock.lock()
+      try {
+        if (refresh || stamp(path).isEmpty) {
+          fetch(cfg)
+          transform(spark, cfg)
+        }
+        current.getOrElse {
+          val before = stamp(path)
+          val rows = readProcessed(spark, cfg, table).toJSON.collect().toIndexedSeq
+          before.filter(stamp(path).contains).foreach(s => snapshots.put(key, Snapshot(s, rows)))
+          rows
+        }
+      } finally lock.unlock()
     }
-    readProcessed(spark, cfg, table)
   }
 
-  /** S12 — JSON records payload {city, count, data} (web.py:376-377). The
-    * `collect` here is the serving boundary, not a data-path collect: the
-    * frame is one city's daily rows. */
-  def recordsJson(df: DataFrame, city: String): String = {
-    val rows = df.toJSON.collect()
-    s"""{"city": "${city}", "count": ${rows.length}, "data": [${rows.mkString(",")}]}"""
-  }
+  /** S12 — JSON records payload {city, count, data} (web.py:376-377). */
+  def recordsJson(rows: Seq[String], city: String): String =
+    s"""{"city": ${WeatherServer.jstr(city)}, "count": ${rows.length}, "data": [${rows.mkString(",")}]}"""
+
+  /** Which write of a processed table a snapshot holds: the file key and
+    * mtime of the table's `_SUCCESS`, which a rewrite deletes and recreates. */
+  private final case class Stamp(fileKey: AnyRef, mtime: FileTime)
+  private final case class Snapshot(stamp: Stamp, rows: IndexedSeq[String])
+
+  private val snapshots = new ConcurrentHashMap[String, Snapshot]()
+  private val cityLocks = new ConcurrentHashMap[String, ReentrantLock]()
+
+  private def normalised(path: String): String =
+    Paths.get(path).toAbsolutePath.normalize.toString
+
+  /** The stamp of a processed table's last completed write; None while the
+    * table is absent or being rewritten. */
+  private def stamp(path: String): Option[Stamp] =
+    try {
+      val a = Files.readAttributes(Paths.get(path, "_SUCCESS"), classOf[BasicFileAttributes])
+      Some(Stamp(a.fileKey, a.lastModifiedTime))
+    } catch { case _: NoSuchFileException => None }
+
+  private def publish(path: String, rows: IndexedSeq[String]): Unit =
+    stamp(path).foreach(s => snapshots.put(normalised(path), Snapshot(s, rows)))
 
   def main(args: Array[String]): Unit = {
     val cmd = args.headOption.getOrElse("all")

@@ -2,15 +2,15 @@ package graft.weather
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentHashMap, Executors}
-import java.util.concurrent.locks.{Lock, ReentrantReadWriteLock}
+import java.util.concurrent.{ExecutorService, Executors, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
 
-import scala.util.{Failure, Try}
+import scala.util.{Failure, Success, Try}
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.core.Config
 import graft.sources.{GeocodeSource, RegionSource}
@@ -32,25 +32,31 @@ import graft.sources.{GeocodeSource, RegionSource}
   *
   * Seams (all injected, so tests and offline runs need no network):
   *  - `dim`: geocode dimension (defaults to the built-in city table);
-  *  - `loadCity`: the /compare per-city loader (defaults to the T1
-  *    cache-or-compute chain; web.py's fetch_city_data);
+  *  - `loadCity`: the /compare per-city loader, returning the city's daily
+  *    JSON records (defaults to the T1 cache-or-compute chain with a `city`
+  *    field appended; web.py's fetch_city_data);
   *  - `provincesPayload` / `regenciesPayload`: raw region JSON suppliers
   *    (default Failure → the reference's fail-soft empty results);
   *  - `funFactSupplier`: the fact generator behind the cache.
   *
   * The per-request `collect`s are the serving boundary, not data-path
-  * collects: each is one city's daily/hourly rows or a top-k row set.
+  * collects: each is a top-k row set or a region list.
   *
-  * A city's processed tables are rewritten in place (`mode(Overwrite)`) by
-  * a refresh, so each city has a read/write lock: a read holds the read
-  * side through its `collect` (the frames are lazy), and a refresh or a
-  * cache-or-compute write holds the write side.
+  * /data/daily, /data/hourly and /compare read through
+  * [[WeatherCli.records]], which serves the rows the transform published
+  * for the city: a hit is a stat of the table's `_SUCCESS` whose stamp
+  * matches the snapshot's, and runs no Spark job, reads no file and takes
+  * no lock. A refresh rewrites the processed tables in place
+  * (`mode(Overwrite)`) under the city's single-flight lock; a read that
+  * finds the stamp changed or `_SUCCESS` missing waits on that lock and
+  * checks again, and a table rewritten by another process is loaded once
+  * and republished. /compare loads each city on its own.
   */
 class WeatherServer(
     spark: SparkSession,
     cfg: Config,
     dim: Option[DataFrame] = None,
-    loadCity: Option[(String, Int) => DataFrame] = None,
+    loadCity: Option[(String, Int) => Seq[String]] = None,
     provincesPayload: () => Try[String] = () => Failure(new Exception("offline")),
     regenciesPayload: String => Try[String] = _ => Failure(new Exception("offline")),
     funFactSupplier: String => Option[String] = _ => None,
@@ -60,40 +66,11 @@ class WeatherServer(
 
   private val geoDim = dim.getOrElse(GeocodeSource.builtinDim(spark))
   private val background = Executors.newSingleThreadExecutor()
-  private val cityLoader: (String, Int) => DataFrame =
+  private val cityLoader: (String, Int) => Seq[String] =
     loadCity.getOrElse { (city, days) =>
-      WeatherCli.serveDaily(spark, cfg.copy(city = city, days = days))
-        .withColumn("city", lit(city))
+      withCity(WeatherCli.records(spark, cfg.copy(city = city, days = days), "daily"), city)
     }
-  @volatile private var server: Option[HttpServer] = None
-  private val cityLocks = new ConcurrentHashMap[String, ReentrantReadWriteLock]()
-
-  /** Lock a city's processed tables for a read of `table`: the read side
-    * when the table exists and no refresh is asked for, else the write side
-    * (the read goes on to compute it). Existence is checked under the read
-    * lock, so no refresh can be deleting the table meanwhile. */
-  private def lockCity(city: String, table: String, refresh: Boolean): Lock = {
-    val rw = cityLocks.computeIfAbsent(WeatherSources.slug(city),
-      _ => new ReentrantReadWriteLock())
-    val read = rw.readLock()
-    read.lock()
-    if (!refresh && Files.exists(Paths.get(
-        WeatherCli.processedPath(cfg.copy(city = city), table)))) read
-    else {
-      read.unlock()
-      rw.writeLock().lock()
-      rw.writeLock()
-    }
-  }
-
-  /** Run `body` holding the locks of `cities`, taken in sorted order so two
-    * requests over overlapping cities cannot deadlock. */
-  private def withCities[T](cities: Seq[String], table: String, refresh: Boolean)(
-      body: => T): T = {
-    val held = cities.distinctBy(WeatherSources.slug).sortBy(WeatherSources.slug)
-      .map(lockCity(_, table, refresh))
-    try body finally held.reverse.foreach(_.unlock())
-  }
+  @volatile private var server: Option[(HttpServer, ExecutorService)] = None
 
   // ---- endpoint payloads (pure JSON-string producers; HTTP-free, spec'd
   // directly in CliSpec and exercised over real HTTP in SourcesSpec) ----
@@ -114,14 +91,12 @@ class WeatherServer(
   }
 
   /** /data/daily (web.py:366-377): T1 cache-or-compute + records payload. */
-  def dailyJson(city: String, refresh: Boolean): String =
-    withCities(Seq(city), "daily", refresh)(WeatherCli.recordsJson(
-      WeatherCli.serveDaily(spark, cfg.copy(city = city), refresh), city))
+  def dailyJson(city: String, refresh: Boolean): String = WeatherCli.recordsJson(
+    WeatherCli.records(spark, cfg.copy(city = city), "daily", refresh), city)
 
   /** /data/hourly (web.py:380-394). */
-  def hourlyJson(city: String, refresh: Boolean): String =
-    withCities(Seq(city), "hourly", refresh)(WeatherCli.recordsJson(
-      WeatherCli.serveHourly(spark, cfg.copy(city = city), refresh), city))
+  def hourlyJson(city: String, refresh: Boolean): String = WeatherCli.recordsJson(
+    WeatherCli.records(spark, cfg.copy(city = city), "hourly", refresh), city)
 
   /** /compare (web.py:512-570): per-city tolerant loads, >=2 requested
     * cities (400), >=2 successes (500 with per-city failures), flattened
@@ -132,11 +107,9 @@ class WeatherServer(
       throw HttpError(400, "Butuh minimal dua kota untuk perbandingan.")
     if (days < 1 || days > 16)
       throw HttpError(400, "days harus 1-16")
-    val loaded = withCities(cityList, "daily", refresh = false)(cityList.map { city =>
-      (city, Try(cityLoader(city, days)).flatMap(df => Try((df, df.toJSON.collect()))))
-    })
+    val loaded = cityList.map(city => (city, Try(cityLoader(city, days))))
     val results = loaded.map {
-      case (city, scala.util.Success((_, recs))) =>
+      case (city, Success(recs)) =>
         s"""{"name": ${jstr(city)}, "daily": [${recs.mkString(",")}], "error": null}"""
       case (city, Failure(e)) =>
         s"""{"name": ${jstr(city)}, "daily": [], "error": ${jstr(e.getMessage)}}"""
@@ -144,14 +117,14 @@ class WeatherServer(
     val failed = loaded.collect { case (city, Failure(e)) =>
       s"""{"city": ${jstr(city)}, "status": 500, "detail": ${jstr(e.getMessage)}}"""
     }
-    val ok = loaded.collect { case (_, scala.util.Success((df, recs))) => (df, recs) }
+    val ok = loaded.collect { case (_, Success(recs)) => recs }
     if (ok.size < 2)
       throw HttpError(500, "Not enough successful city data for comparison")
     // flattened rows: union of the per-city record arrays, in request order
     // (pd.concat of the per-city frames, web.py:558-561) — the frames are
     // schema-aligned by Compare.unionCities semantics; records here reuse
-    // the already-collected per-city arrays so the union costs nothing.
-    val merged = ok.flatMap(_._2)
+    // the already-loaded per-city arrays so the union costs nothing.
+    val merged = ok.flatten
     s"""{"cities": [${results.mkString(",")}], "count": ${merged.length}, """ +
       s""""days": $days, "data": [${merged.mkString(",")}], """ +
       s""""failed": [${failed.mkString(",")}]}"""
@@ -231,14 +204,20 @@ class WeatherServer(
   def start(): Int = {
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     s.createContext("/", (exchange: HttpExchange) => handle(exchange))
-    s.setExecutor(Executors.newFixedThreadPool(4))
+    val pool = Executors.newFixedThreadPool(4, handlerThreads)
+    s.setExecutor(pool)
     s.start()
-    server = Some(s)
+    server = Some((s, pool))
     s.getAddress.getPort
   }
 
+  /** Stop listening and shut down the handler pool, which `HttpServer.stop`
+    * leaves running. */
   def stop(): Unit = {
-    server.foreach(_.stop(0))
+    server.foreach { case (s, pool) =>
+      s.stop(0)
+      pool.shutdown()
+    }
     server = None
     background.shutdown()
   }
@@ -271,6 +250,21 @@ object WeatherServer {
   /** An endpoint error carrying its HTTP status (FastAPI's HTTPException). */
   final case class HttpError(status: Int, detail: String)
     extends RuntimeException(detail)
+
+  /** Name prefix of the started servers' handler threads. */
+  val HandlerThreadPrefix = "weather-server-"
+
+  private val handlerIds = new AtomicInteger()
+  private val handlerThreads: ThreadFactory =
+    r => new Thread(r, HandlerThreadPrefix + handlerIds.incrementAndGet())
+
+  /** `records` with a trailing `"city"` field, rendered exactly as
+    * `withColumn("city", lit(city)).toJSON` renders it (Jackson's escaping;
+    * an all-null row renders as `{}`). */
+  def withCity(records: Seq[String], city: String): Seq[String] = {
+    val tag = "\"city\":\"" + new String(JsonStringEncoder.getInstance.quoteAsString(city)) + "\""
+    records.map(r => if (r == "{}") s"{$tag}" else s"${r.dropRight(1)},$tag}")
+  }
 
   /** Minimal JSON string literal with the escapes RFC 8259 requires. */
   def jstr(s: String): String = {

@@ -61,31 +61,71 @@ class CliSpec extends SparkSpec {
     assert(daily.length == 1)
     assert(daily(0).getAs[String]("sunrise") == "2025-01-01T05:58")
     assert(daily(0).getAs[String]("sunset") == "2025-01-01T18:10")
-    val served = spark.read.parquet(s"${c.processedDir}/bandung_daily.parquet")
-    val json = WeatherCli.recordsJson(served, "Bandung")
+    val json = WeatherCli.recordsJson(WeatherCli.records(spark, c, "daily"), "Bandung")
     assert(json.contains(""""sunrise":"2025-01-01T05:58""""))
     assert(json.contains(""""sunset":"2025-01-01T18:10""""))
   }
 
   test("serveDaily is cache-or-compute: computes once, then serves the cache") {
     val c = cfg()
-    val first = WeatherCli.serveDaily(spark, c) // no processed zone -> computes
-    assert(first.count() == 2)
+    val first = WeatherCli.records(spark, c, "daily") // no processed zone -> computes
+    assert(first.length == 2)
     val parquet = java.nio.file.Paths.get(s"${c.processedDir}/bandung_daily.parquet")
     val mtime = Files.getLastModifiedTime(parquet)
-    val second = WeatherCli.serveDaily(spark, c) // cache hit -> no rewrite
-    assert(second.count() == 2)
+    val second = WeatherCli.records(spark, c, "daily") // cache hit -> no rewrite
+    assert(second.length == 2)
     assert(Files.getLastModifiedTime(parquet) == mtime)
-    WeatherCli.serveDaily(spark, c, refresh = true) // forced recompute
+    WeatherCli.records(spark, c, "daily", refresh = true) // forced recompute
     assert(Files.getLastModifiedTime(parquet) != mtime)
   }
 
-  test("transform runs each city's plan once: at most 10 jobs for four sinks") {
+  test("transform runs each city's plan once: at most 8 jobs for four sinks") {
     val c = cfg()
     WeatherCli.fetch(c)
-    // two raw scans, two checkpoints, four writes
+    // two raw scans, two checkpoints (materialised by the published
+    // collects), four writes
     val jobs = SparkSpec.launched(spark)(WeatherCli.transform(spark, c)).jobs
-    assert(jobs <= 10, s"$jobs jobs for one city's transform")
+    assert(jobs <= 8, s"$jobs jobs for one city's transform")
+  }
+
+  test("transform publishes exactly the written rows, served with no Spark job") {
+    val c0 = cfg()
+    val samples = Files.createDirectories(Paths.get(c0.samplesDir))
+    val ragged = "Kota Panjang"
+    val (weather, air) = SixteenDayPayloads
+    Files.writeString(samples.resolve(s"${WeatherSources.slug(ragged)}_weather.json"), weather)
+    Files.writeString(samples.resolve(s"${WeatherSources.slug(ragged)}_air.json"), air)
+    Seq("Bandung" -> (2, 3), ragged -> (16, 384)).foreach { case (city, (days, hours)) =>
+      val c = c0.copy(city = city)
+      WeatherCli.fetch(c)
+      WeatherCli.transform(spark, c)
+      Seq("daily" -> days, "hourly" -> hours).foreach { case (table, n) =>
+        var published = IndexedSeq.empty[String]
+        val jobs = SparkSpec.launched(spark) {
+          published = WeatherCli.records(spark, c, table)
+        }.jobs
+        assert(jobs == 0, s"$city $table")
+        assert(published.length == n, s"$city $table")
+        assert(published == WeatherCli.readProcessed(spark, c, table).toJSON.collect().toSeq,
+          s"$city $table")
+      }
+    }
+  }
+
+  test("a table rewritten without a publish is read from disk on the next request") {
+    val c = cfg()
+    WeatherCli.fetch(c)
+    WeatherCli.transform(spark, c)
+    assert(WeatherCli.records(spark, c, "daily").length == 2)
+    // what another process's transform would leave: new rows, no snapshot
+    val rewritten = WeatherCli.readProcessed(spark, c, "daily")
+      .withColumn("temp_max", col("temp_max") + 100).localCheckpoint()
+    WeatherSources.writeProcessed(rewritten, c.processedDir, "bandung_daily")
+    val served = WeatherCli.records(spark, c, "daily")
+    assert(served == rewritten.toJSON.collect().toSeq)
+    assert(served.exists(_.contains(""""temp_max":126.5""")))
+    // loaded once, then served from the republished snapshot
+    assert(SparkSpec.launched(spark)(WeatherCli.records(spark, c, "daily")).jobs == 0)
   }
 
   test("the processed tables have exactly the declared schemas") {
@@ -128,7 +168,7 @@ class CliSpec extends SparkSpec {
 
   test("recordsJson emits the {city, count, data} payload (S12)") {
     val df = Seq(("2025-01-01", 26.5)).toDF("date", "temp_max")
-    val json = WeatherCli.recordsJson(df, "Bandung")
+    val json = WeatherCli.recordsJson(df.toJSON.collect().toSeq, "Bandung")
     assert(json.startsWith("""{"city": "Bandung", "count": 1,"""))
     assert(json.contains(""""temp_max":26.5"""))
   }
@@ -730,6 +770,24 @@ object CliSpec {
     "Kota Debu" -> (payload(Weather), payload(replaced(Air, "pm10", "[20.0]"))),
     "Kota Lengkap" -> (payload(Weather), payload(Air)),
     "Kota Surya" -> (payload(Weather, Some(Sun)), payload(Air)))
+
+  /** A 16-day payload (384 hours) with a ragged `relative_humidity_2m`
+    * and a short `pm10` (FIXTURES §1.9). */
+  val SixteenDayPayloads: (String, String) = {
+    val hours = 16 * 24
+    val times = (0 until hours).map { h =>
+      val hour = java.time.LocalDate.of(2025, 5, 1).plusDays(h / 24L).toString + f"T${h % 24}%02d:00"
+      "\"" + hour + "\""
+    }
+    def series(n: Int, f: Int => Double) = (0 until n).map(f).mkString("[", ", ", "]")
+    def block(fields: (String, String)*) =
+      (("time" -> times.mkString("[", ", ", "]")) +: fields)
+        .map { case (k, v) => s""""$k": $v""" }.mkString("""{"hourly": {""", ", ", "}}")
+    (block("temperature_2m" -> series(hours, h => 20 + (h * 7 % 130) / 10.0),
+        "precipitation" -> series(hours, h => (h % 9) * 0.25),
+        "relative_humidity_2m" -> series(hours - 5, h => 50 + h % 50)),
+      block("pm2_5" -> series(hours, h => 5 + h % 120), "pm10" -> series(hours - 2, h => 9 + h % 150)))
+  }
 
   /** The daily and hourly CSV sinks of each shape, byte for byte, captured
     * from the per-sink plans that preceded the one-partition transform: the

@@ -58,9 +58,11 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val plans = SparkSpec.launched(spark)(WeatherCli.transform(spark, c)).plans
     def nodes(p: SparkPlan) = collectWithSubqueries(p) { case n => n }
     // two checkpoints (the merge-and-sort hourly plan, the aggregate-and-sort
-    // daily plan) and the four sink writes over them
+    // daily plan), the two published collects that materialise them, and the
+    // four sink writes over them
     assert(plans.map(_._1).count(_ == "localCheckpoint") == 2, plans.map(_._1))
-    assert(plans.size == 6, plans.map(_._1))
+    assert(plans.map(_._1).count(_ == "collect") == 2, plans.map(_._1))
+    assert(plans.size == 8, plans.map(_._1))
     val all = plans.flatMap { case (_, p) => nodes(p) }
     assert(all.exists { case j: BaseJoinExec => j.joinType == FullOuter; case _ => false } &&
       all.exists(_.isInstanceOf[HashAggregateExec]), "the city's plan was not inspected")

@@ -1,12 +1,16 @@
 package graft
 
-import java.net.URI
+import java.net.{HttpURLConnection, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 import java.util.concurrent.{Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.functions.lit
 
 import graft.core.Config
 import graft.weather.WeatherServer
@@ -104,7 +108,7 @@ class ServerSpec extends SparkSpec {
     val loader = (city: String, days: Int) =>
       if (city == "Kotagagal") sys.error("fetch gagal")
       else Seq((city, s"2025-01-0${days.min(9)}", 20.0 + city.length))
-        .toDF("city", "date", "temp_min")
+        .toDF("city", "date", "temp_min").toJSON.collect().toSeq
     val srv = new WeatherServer(spark, cfg, loadCity = Some(loader))
     assert(intercept[HttpError](
       srv.route("/compare", Map("cities" -> "Bandung"))).status == 400)
@@ -116,6 +120,75 @@ class ServerSpec extends SparkSpec {
     assert(body.contains(""""days": 3"""))
     assert(body.contains(""""failed": [{"city": "Kotagagal""""))
     assert(intercept[HttpError](srv.compareJson("a,b", 17)).status == 400)
+  }
+
+  test("reads of published cities launch no Spark job: daily, hourly, compare") {
+    val (srv, _) = newServer()
+    // the first read of each city computes it, and the transform publishes
+    Seq("Bandung", "Jakarta").foreach(c => srv.route("/data/daily", Map("city" -> c)))
+    var bodies = Seq.empty[String]
+    val jobs = SparkSpec.launched(spark) {
+      bodies = Seq(srv.route("/data/daily", Map("city" -> "Bandung")),
+        srv.route("/data/hourly", Map("city" -> "Jakarta")),
+        srv.route("/compare", Map("cities" -> "Bandung,Jakarta")))
+    }.jobs
+    assert(jobs == 0)
+    assert(bodies.zip(Seq(2, 3, 4)).forall { case (b, n) => b.contains(s""""count": $n,""") },
+      bodies.map(_.take(200)))
+  }
+
+  test("the /compare city tag renders as Spark renders a city column") {
+    import spark.implicits._
+    val df = Seq((Some("2025-01-01"), Some(26.5)), (None, None)).toDF("date", "temp_max")
+    val city = "Kota \"Hujan\" \\ Ujung\nPandang é 東京 \u0001\t"
+    assert(WeatherServer.withCity(df.toJSON.collect().toSeq, city) ==
+      df.withColumn("city", lit(city)).toJSON.collect().toSeq)
+  }
+
+  test("/data/daily echoes a city with quotes and backslashes as valid JSON") {
+    val (srv, _) = newServer()
+    val city = "Kota \"Kembang\" \\ Bandung"
+    val body = new ObjectMapper().readTree(srv.route("/data/daily", Map("city" -> city)))
+    assert(body.get("city").asText == city)
+    assert(body.get("count").asInt == 2 && body.get("data").size == 2)
+  }
+
+  test("stop() ends the server's handler threads") {
+    def handlers() = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(WeatherServer.HandlerThreadPrefix)).toSet
+    val before = handlers()
+    val (srv, _) = newServer()
+    val port = srv.start()
+    val client = HttpClient.newHttpClient()
+    val started = try {
+      (1 to 4).foreach(_ => client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/health")).build(),
+        HttpResponse.BodyHandlers.ofString()))
+      handlers() -- before
+    } finally srv.stop()
+    assert(started.nonEmpty)
+    started.foreach(_.join(10000))
+    assert(started.forall(!_.isAlive), started.filter(_.isAlive).map(_.getName))
+  }
+
+  test("keep-alive round trips do not wait for a delayed ACK (TCP_NODELAY)") {
+    val (srv, _) = newServer()
+    val port = srv.start()
+    try {
+      def health(): Unit = {
+        val conn = URI.create(s"http://127.0.0.1:$port/health").toURL
+          .openConnection().asInstanceOf[HttpURLConnection]
+        val in = conn.getInputStream
+        try in.readAllBytes() finally in.close()
+      }
+      health() // connection set-up; later requests reuse the connection
+      val ms = (1 to 20).map { _ =>
+        val t = System.nanoTime()
+        health()
+        (System.nanoTime() - t) / 1e6
+      }.sorted
+      assert((ms(9) + ms(10)) / 2 < 15, ms)
+    } finally srv.stop()
   }
 
   test("/api/provinces + regencies: polymorphic payloads, fail-soft offline") {
