@@ -45,11 +45,17 @@ object GateRunner {
     }
   }
 
-  /** Bench's per-gate sequence, shared with [[ScaleCheck]]: a full GC, then
-    * `warmups` untimed runs (codegen, JIT, classloading) and `reps` timed
-    * runs into the [[noop]] sink, with a [[sweep]] between runs so every
-    * timed run redoes all real work. Failures and RDD-level leaks go to
-    * stderr as `[tag] <name> failed: ...` / `[tag] <name> leaked ...`.
+  /** Bench's per-gate sequence, shared with [[ScaleCheck]] and
+    * [[ProfileOne]]: a full GC, then `warmups` untimed runs (codegen, JIT,
+    * classloading) and `reps` timed runs into the [[noop]] sink, with a
+    * [[sweep]] between runs so every timed run redoes all real work.
+    * Failures and RDD-level leaks go to stderr as `[tag] <name> failed: ...`
+    * / `[tag] <name> leaked ...`.
+    *
+    * Every job a run launches carries the job group `<name>#warm` or
+    * `<name>#timed` (`<name>#prewarm` for the prewarm), so a listener can
+    * charge it to the gate and keep the timed run apart. The calling
+    * thread has no job group afterwards.
     *
     * The GC runs before any timing: heap residue from prior gates (old-gen
     * churn, codegen caches) was measured inflating timings 2.6–4.5x on
@@ -71,16 +77,21 @@ object GateRunner {
         System.err.println(s"[$tag] $name leaked ${leftover.size} RDD-level " +
           s"persist(s): ${leftover.mkString(", ")}")
     }
-    def prewarm(): Unit =
+    def grouped[T](phase: String)(body: => T): T = {
+      spark.sparkContext.setJobGroup(s"$name#$phase", s"$name#$phase")
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+    def prewarm(): Unit = grouped("prewarm") {
       try q.prewarm.foreach(f => f(spark, dir)) catch { case e: Throwable => failed(e) }
-    def once(): Double = {
+    }
+    def once(phase: String): Double = grouped(phase) {
       val r = run(spark, q, dir)(noop)
       r.failure.foreach(failed)
       r.seconds
     }
     System.gc()
-    (1 to warmups).foreach { _ => prewarm(); once(); swept() }
-    val timed = (1 to reps).map { _ => swept(); prewarm(); once() }
+    (1 to warmups).foreach { _ => prewarm(); once("warm"); swept() }
+    val timed = (1 to reps).map { _ => swept(); prewarm(); once("timed") }
     swept() // leave nothing cached for the next gate
     Timing(timed, failures.toSeq)
   }

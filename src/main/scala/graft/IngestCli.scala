@@ -212,9 +212,8 @@ object IngestCli {
     * the corpus-sized artifacts per batch (that is a full-corpus IO pass);
     * they are masked by a churn-bounded tombstone list the probes
     * anti-join, and [[compactState]] folds the mask in on an explicit
-    * maintenance schedule (exactly [[graft.operators.Similarity.deleteFromIvf]]'s
-    * split between logical delete and physical rewrite, minus the
-    * cell-pruning its partitioned layout affords). */
+    * maintenance schedule (the usual split between logical delete and
+    * physical rewrite). */
   private def tombstoned(spark: SparkSession, stateDir: String,
                          dir: String, joinCol: String): DataFrame = {
     val base = spark.read.parquet(s"$stateDir/$dir")

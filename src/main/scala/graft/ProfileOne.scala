@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
 import org.apache.spark.scheduler._
 
 import scala.collection.mutable
@@ -8,10 +10,10 @@ import graft.core.GraftSession
 
 /** Per-job / per-stage breakdown for one inventory query — the
   * empirical half of the optimization loop (guide §1.1) where the UI is
-  * unavailable. Runs the gate exactly as Bench does (prewarm outside the
-  * timed region, noop sink, warm run first) and prints, for the timed run:
-  * every job (wall ms, description) and every stage (task-time sum, input
-  * bytes, shuffle read/write bytes, peak task count).
+  * unavailable. Runs the gate through [[GateRunner.measure]] (two warm
+  * runs, one timed run) and prints, for the jobs of the `<gate>#timed` job
+  * group: every job (wall ms, description) and every stage (task-time sum,
+  * input bytes, shuffle read/write bytes, peak task count).
   *
   * Usage: SPARK_GRAFT_CPUS=16 sbt "runMain graft.ProfileOne q_name [sfDir]"
   */
@@ -30,23 +32,30 @@ object ProfileOne {
     val jobs = mutable.ArrayBuffer[JobRec]()
     val stages = mutable.Map[Int, StageRec]()
     val details = mutable.Map[Int, String]()
-    @volatile var record = false
+    val timedStages = mutable.Set[Int]()
+    val timedGroup = s"$name#timed"
+    val markerGroup = s"$name#marker"
+    val drained = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        val r = JobRec(e.jobId, desc, System.nanoTime())
-        r.stages ++= e.stageIds
-        jobs.synchronized { jobs += r }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        prop("spark.jobGroup.id") match {
+          case Some(`timedGroup`) =>
+            val r = JobRec(e.jobId, prop("spark.job.description").getOrElse(""),
+              System.nanoTime())
+            r.stages ++= e.stageIds
+            jobs.synchronized { jobs += r }
+            stages.synchronized { timedStages ++= e.stageIds }
+          case Some(`markerGroup`) => drained.countDown()
+          case _ =>
+        }
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (record) {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.synchronized {
           jobs.find(_.id == e.jobId).foreach(_.end = System.nanoTime())
         }
-      }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (record) {
+        if (stages.synchronized(timedStages(e.stageInfo.stageId))) {
           val si = e.stageInfo
           val m = si.taskMetrics
           val where = si.details.linesIterator
@@ -68,19 +77,16 @@ object ProfileOne {
     spark.sparkContext.addSparkListener(listener)
 
     val q = SparkEntry.inventory.toMap.apply(name)
-    def once(): Double = {
-      val run = GateRunner.run(spark, q, sfDir)(GateRunner.noop)
-      run.failure.foreach(e => throw e)
-      run.seconds
-    }
-    def prewarm(): Unit = q.prewarm.foreach(f => f(spark, sfDir))
     // two warm runs (fresh JVM): codegen + JIT
-    (1 to 2).foreach { _ => prewarm(); once(); GateRunner.sweep(spark) }
-    System.gc()
-    prewarm()
-    record = true
-    val secs = once()
-    record = false
+    val timing = GateRunner.measure(spark, name, q, sfDir, "profile", warmups = 2, reps = 1)
+    timing.failures.headOption.foreach(e => throw e)
+    val secs = timing.median
+    // listener events arrive asynchronously but in order: once a job
+    // started after the timed run is seen, so is every timed job and stage
+    spark.sparkContext.setJobGroup(markerGroup, markerGroup)
+    spark.range(1).collect()
+    spark.sparkContext.clearJobGroup()
+    require(drained.await(60, TimeUnit.SECONDS), "listener events did not arrive")
     println(f"%nTIMED RUN: $name = $secs%.3f s%n")
     println(f"${"job"}%4s ${"wall_ms"}%8s  desc / stages")
     jobs.foreach { j =>

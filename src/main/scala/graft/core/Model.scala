@@ -37,22 +37,8 @@ object Model {
       pm10_avg: Option[Double],
       pm25_category: String)
 
-  /** Daily plus the derived alert flags (SURVEY §2.6 gap resolution). */
-  case class DailyAlerts(
-      date: Option[Date],
-      temp_min: Option[Double],
-      temp_max: Option[Double],
-      total_rain: Option[Double],
-      pm25_avg: Option[Double],
-      pm10_avg: Option[Double],
-      pm25_category: String,
-      is_hot_day: Option[Boolean],
-      is_heavy_rain: Option[Boolean],
-      is_unhealthy_pm25: Option[Boolean])
-
   implicit val hourlyEncoder: Encoder[Hourly] = Encoders.product[Hourly]
   implicit val dailyEncoder: Encoder[Daily] = Encoders.product[Daily]
-  implicit val dailyAlertsEncoder: Encoder[DailyAlerts] = Encoders.product[DailyAlerts]
 
   /** Typed views over the DataFrame pipeline outputs. `as[T]` only binds
     * columns by name/type — no data movement, the optimized plan is shared. */
@@ -61,5 +47,4 @@ object Model {
     df.withColumn("time", col("time").cast("timestamp")).as[Hourly]
   }
   def daily(df: DataFrame): Dataset[Daily] = df.as[Daily]
-  def dailyAlerts(df: DataFrame): Dataset[DailyAlerts] = df.as[DailyAlerts]
 }

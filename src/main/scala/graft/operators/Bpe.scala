@@ -194,18 +194,6 @@ object Bpe {
       spark.sparkContext.parallelize(rows, 1), MergeSchema)
   }
 
-  /** Persist a trained merge table (the tokenizer artifact: train once on
-    * the reference corpus, every encode job loads the same ranked merges —
-    * retraining would silently change every token boundary downstream). */
-  def saveMerges(merges: DataFrame, dir: String): Unit =
-    merges.coalesce(1).write.mode("overwrite").parquet(dir)
-
-  /** Load a merge table persisted by [[saveMerges]]; [[applyBpe]] against
-    * it encodes identically to the in-memory original (the ranked rows ARE
-    * the tokenizer). */
-  def loadMerges(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
-
   /** Encode a word with a rank-indexed merge map: repeatedly apply the
     * LOWEST-RANK merge present among adjacent pairs (the standard BPE
     * encoding rule — application order is merge priority, not left-to-right
@@ -268,15 +256,6 @@ object Bpe {
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
   }
-
-  /** Per-doc subtoken count under a trained merge table. */
-  def subtokenCount(docs: DataFrame, idCol: String, textCol: String,
-                    merges: DataFrame): DataFrame =
-    applyBpe(docs, idCol, textCol, merges)
-      .select(col("doc_id"),
-        coalesce(aggregate(col("words"), lit(0L),
-          (acc, w) => acc + size(w.getField("subtokens"))), lit(0L))
-          .as("n_subtokens"))
 
   /** TOKENIZER-FIT report: per group, word count, subtoken count, FERTILITY
     * (subtokens per word — the standard "does this tokenizer fit this

@@ -16,14 +16,9 @@ import graft.functions.TextFunctions
   */
 object Curation {
 
-  /** RE2-safe URL pattern (no lookaround): scheme + non-space run. */
-  val UrlPattern = "https?://[^ \\t\\n\\r]+"
   /** Group 1 = raw authority (up to the first slash / whitespace): may still
     * carry userinfo, port, and mixed case — see [[normalizeDomain]]. */
   val DomainPattern = "https?://([^/ \\t\\n\\r]+)"
-
-  def extractUrls(text: Column): Column =
-    regexp_extract_all(text, lit(UrlPattern), lit(0))
 
   /** Canonical domain from a raw URL authority: strip userinfo (`user@`) and
     * port (`:8080`), lowercase, and (by default) fold a leading `www.` —
@@ -308,8 +303,7 @@ object Curation {
     * The bounded prefix list collapses to ONE broadcast array row at
     * plan-build time and matching is a scan-stage `exists(startsWith)` —
     * a pure function of the row, so the SAME operator runs append-mode on
-    * a stream (the [[graft.streaming.StreamingOps.blocklistStream]]
-    * shape). Per-row cost is linear in the list; a list big enough to need
+    * a stream. Per-row cost is linear in the list; a list big enough to need
     * an index is screened in the batch backfill. BOTH sides canonicalize
     * (prefixes are URL-shaped), so `HTTP://Example.com/login#x` cannot
     * dodge an `http://Example.COM/login` rule while path case stays

@@ -207,14 +207,4 @@ object Decontaminate {
         col("best.cosine").as("max_cosine"),
         (col("best.cosine") >= threshold).as("is_contaminated"))
   }
-
-  /** Drop the [[semanticFlags]]-contaminated documents (anti-join on the
-    * unique doc id). */
-  def semanticClean(corpus: DataFrame, idCol: String, vecCol: String,
-                    bench: DataFrame, benchIdCol: String, benchVecCol: String,
-                    threshold: Double): DataFrame =
-    corpus.join(
-      semanticFlags(corpus, idCol, vecCol, bench, benchIdCol, benchVecCol, threshold)
-        .filter(col("is_contaminated")).select(col(idCol)),
-      Seq(idCol), "left_anti")
 }

@@ -305,10 +305,10 @@ object Dedup {
   /** Per-ROW minhash signature h0..h{k-1} — the stateless twin of
     * [[minhashSig]]: the same (a*x + b) mod P permutation minima, computed
     * as array folds over the row's own token set instead of a min-groupBy
-    * over the exploded token index. Zero shuffles and zero state, so it
-    * runs per-row on an unbounded STREAM (the groupBy formulation is a
-    * stateful aggregation there). Values are identical to [[minhashSig]]
-    * for any non-empty token set — min over the same multiset. A doc with
+    * over the exploded token index: zero shuffles and zero state, and the
+    * differential reference OperatorsSpec checks [[minhashSig]] against.
+    * Values are identical to [[minhashSig]] for any non-empty token set —
+    * min over the same multiset. A doc with
     * NO tokens (absent from minhashSig's grouped output entirely) yields
     * null minima here; its bands hash a constant that can only collide
     * with other empty docs, and exact-Jaccard verification (null on empty
@@ -365,8 +365,7 @@ object Dedup {
     val (a0, b0) = HashParams(0)
     val g = tokenIndex(docs, idCol, textCol, tokens)
       // the fingerprint is staged in its own projection (ONE md5 per
-      // token) — bin and permutation are cheap ops over it, the
-      // withMinhashSigCols discipline
+      // token) — bin and permutation are cheap ops over it
       .select(col("doc_id"), tokenFingerprint(col("tok")).as("x"))
       .select(col("doc_id"), pmod(col("x"), lit(k.toLong)).as("bin"),
         pmod(lit(a0) * col("x") + lit(b0), lit(HashPrime)).as("pv"))
@@ -411,37 +410,8 @@ object Dedup {
     sig.select(col("doc_id"), explode(bandStructs(k, rowsPerBand)).as("e"))
       .select(col("doc_id"), col("e.band"), col("e.band_hash"))
 
-  /** Recall/cost TUNING REPORT for MinHash-LSH configurations — the
-    * dedup-family twin of [[Similarity.ivfRecallReport]]: for each
-    * (k, rowsPerBand) config, the fraction of TRUE ≥-threshold Jaccard
-    * pairs the banded candidate generation recovers (recall — the
-    * missed-duplicate risk) beside the candidate-pair count (the
-    * verification-cost side). The curve an operator reads before fixing a
-    * production banding: more, narrower bands raise recall AND cost; this
-    * measures both on the actual corpus instead of trusting the
-    * 1−(1−s^r)^b formula's uniformity assumptions.
-    *
-    * Ground truth is [[jaccardPairs]] under the same tokenizer and df cut
-    * — computed ONCE for the whole curve (CacheScope-pinned). An exact
-    * duplicate (jaccard 1) collides in every band, so its pair is
-    * recovered at any config — recall is 1.0 on identical-pair truth
-    * (spec-pinned). Per config: one signature pass, the banded self-join,
-    * and two counts; all frames are pair-bounded past the scans.
-    * `oph = true` runs the curve over [[minhashSigOph]] signatures — the
-    * adoption check an operator reads before switching the signature
-    * scheme on a production index. */
-  def lshRecallReport(docs: DataFrame, idCol: String, textCol: String,
-                      threshold: Double, configs: Seq[(Int, Int)],
-                      maxTokenDf: Long = 0L,
-                      tokens: Column => Column = TextFunctions.tokenSet,
-                      scope: CacheScope.Handle = CacheScope.detached,
-                      oph: Boolean = false): DataFrame =
-    lshRecallMatrix(docs, idCol, textCol, threshold, configs, maxTokenDf,
-      tokens, scope, families = Seq(oph))
-      .drop("family")
-
-  /** The two-axis form of [[lshRecallReport]]: one recall/cost row per
-    * (signature family × banding config), both families measured against
+  /** LSH recall/cost report: one row per (signature family × banding
+    * config), both families measured against
     * ONE shared truth set. The truth computation (df-filtered all-pairs
     * Jaccard) dominates the report's cost and is family-independent, so a
     * bake-off that ran the report once per family paid it twice for no

@@ -306,8 +306,7 @@ object Diagnostics {
     round(-(sum(col("lp")).cast("double")) / count(lit(1)), 6).as("avg_nll"))
 
   /** Batch drift report: per-source cross-entropy + OOV rate against a
-    * reference [[SurpriseModel]] — the static twin of
-    * [[graft.streaming.StreamingOps.driftMonitorStream]]. */
+    * reference [[SurpriseModel]]. */
   def surpriseBySource(docs: DataFrame, sourceCol: String, textCol: String,
                        model: SurpriseModel): DataFrame =
     surpriseTokens(docs.withColumnRenamed(sourceCol, "source"), textCol,
@@ -543,9 +542,8 @@ object Diagnostics {
   }
 
   /** Population Stability Index between a REFERENCE corpus slice and the
-    * CURRENT one over a categorical feature — the batch between-crawl
-    * drift report beside the live [[graft.streaming.StreamingOps]] drift
-    * monitor: has the language / source / quality-bucket mix moved enough
+    * CURRENT one over a categorical feature — the between-crawl drift
+    * report: has the language / source / quality-bucket mix moved enough
     * that yesterday's filter thresholds and mixture weights no longer
     * describe today's corpus? (PSI < 0.1 stable, 0.1–0.25 drifting, > 0.25
     * re-tune — the standard scorecard bands.)
@@ -674,8 +672,8 @@ object Diagnostics {
     * or `unchanged`. What a curation team reads before re-running an
     * expensive downstream stage — an unchanged-heavy diff means the
     * incremental paths ([[Dedup.exactIncrement]],
-    * [[Dedup.componentsIncrement]], [[graft.streaming.StreamingOps]]'
-    * ingest twins) can take the delta instead of the corpus.
+    * [[Dedup.componentsIncrement]], the [[graft.IngestCli]] batch) can take
+    * the delta instead of the corpus.
     *
     * Scale shape: ONE full-outer hash join on the id (both sides reduced
     * to (id, md5) in the scan stage — content never shuffles), statuses a

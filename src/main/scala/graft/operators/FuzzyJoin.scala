@@ -53,15 +53,6 @@ object FuzzyJoin {
         col("dist").cast("bigint").as("dist"))
   }
 
-  /** Self-join variant: unordered pairs once (id_a < id_b), the fuzzy-dup
-    * candidate surface for a key column. */
-  def selfJoin(df: DataFrame, idCol: String, keyCol: String,
-               maxDist: Int): DataFrame =
-    join(df, df, idCol, keyCol, maxDist)
-      .filter(col("id_l") < col("id_r"))
-      .select(col("id_l").as("id_a"), col("id_r").as("id_b"),
-        col("key_l").as("key_a"), col("key_r").as("key_b"), col("dist"))
-
   // ---------- segment (pigeonhole) blocking — the PassJoin family ----------
 
   /** Even t+1-way partition boundaries of a length-L key: the first
@@ -154,14 +145,6 @@ object FuzzyJoin {
         col("dist").cast("bigint").as("dist"))
       .unionByName(shortPairs)
   }
-
-  /** [[selfJoin]] over [[joinSegments]] blocking. */
-  def selfJoinSegments(df: DataFrame, idCol: String, keyCol: String,
-                       maxDist: Int): DataFrame =
-    joinSegments(df, df, idCol, keyCol, maxDist)
-      .filter(col("id_l") < col("id_r"))
-      .select(col("id_l").as("id_a"), col("id_r").as("id_b"),
-        col("key_l").as("key_a"), col("key_r").as("key_b"), col("dist"))
 
   // ---------- record linkage: 1:1 assignment over a scored pair frame ----
 

@@ -246,10 +246,8 @@ object LanguageModel {
   }
 
   /** Per-token rounded log-probabilities: (doc_id, extra..., lp) — the
-    * stateless part of scoring (scan-stage stream + three broadcast model
-    * lookups), shared by batch [[perplexity]] and the streaming scorer in
-    * [[graft.streaming.StreamingOps]]. `extra` columns (e.g. the event-time
-    * column a streaming aggregation needs) pass through untouched. */
+    * stateless part of [[perplexity]]'s scoring (scan-stage stream + three
+    * broadcast model lookups). `extra` columns pass through untouched. */
   private[graft] def tokenLogProbs(docs: DataFrame, idCol: String,
                                    textCol: String, lm: BigramLm,
                                    extra: Seq[String] = Nil): DataFrame =
@@ -277,10 +275,6 @@ object LanguageModel {
         round(log(s), 9).cast("decimal(28,9)").as("lp")): _*)
   }
 
-  /** Streaming scoring aggregates for a (window, doc_id) group — exposed
-    * for the streaming twin, which owns watermarking and windowing. */
-  private[graft] def streamingPplAggs: Seq[org.apache.spark.sql.Column] = pplAggs
-
   /** Train-and-score convenience: model on `ref`, scores over `docs`. */
   def perplexityAgainst(docs: DataFrame, ref: DataFrame,
                         idCol: String, textCol: String,
@@ -289,31 +283,6 @@ object LanguageModel {
                           graft.core.CacheScope.detached): DataFrame =
     perplexity(docs, idCol, textCol,
       trainBigramLm(ref, idCol, textCol, vocabCap, bigramCap, scope))
-
-  /** Persist a trained model under `dir` — the deployment shape: the
-    * reference model trains once (on the curated reference corpus) and
-    * every later scoring job loads it; retraining per job would both waste
-    * the reference pass and let the filter drift run to run. Frames are
-    * cap-bounded parquet; the two scalars ride a one-row meta table. */
-  def saveLm(lm: BigramLm, dir: String): Unit = {
-    val spark = lm.unigrams.sparkSession
-    import spark.implicits._
-    lm.unigrams.coalesce(1).write.mode("overwrite").parquet(s"$dir/unigrams")
-    lm.bigrams.coalesce(1).write.mode("overwrite").parquet(s"$dir/bigrams")
-    Seq((lm.totalTokens, lm.vocabTypes)).toDF("total_tokens", "vocab_types")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Load a model persisted by [[saveLm]]; scoring against it is
-    * bit-identical to scoring against the in-memory original (the frames
-    * hold the same rows; the scalars are exact longs). */
-  def loadLm(spark: org.apache.spark.sql.SparkSession, dir: String): BigramLm = {
-    val meta = spark.read.parquet(s"$dir/meta").head
-    BigramLm(spark.read.parquet(s"$dir/unigrams"),
-      spark.read.parquet(s"$dir/bigrams"),
-      totalTokens = meta.getAs[Long]("total_tokens"),
-      vocabTypes = meta.getAs[Long]("vocab_types"))
-  }
 
   /** ONE materialized tokenization of the scoring corpus, shared by both
     * passes of every two-model scorer below: tokenizing per scorer re-runs
@@ -796,9 +765,8 @@ object LanguageModel {
       .agg(pplAggs.head, pplAggs.tail: _*)
 
   /** The stateless half of KN scoring — (doc_id, extra..., lp): scan-stage
-    * stream + four broadcast model lookups, shared by the batch scorer and
-    * the streaming twin ([[graft.streaming.StreamingOps.perplexityKnStream]]),
-    * mirroring [[tokenLogProbs]]'s contract. */
+    * stream + four broadcast model lookups, mirroring [[tokenLogProbs]]'s
+    * contract. */
   private[graft] def knTokenLogProbs(docs: DataFrame, idCol: String,
                                      textCol: String, lm: KneserNeyLm,
                                      extra: Seq[String] = Nil): DataFrame = {
@@ -822,32 +790,5 @@ object LanguageModel {
       .join(cont, col("w") === col("__cw"), "left")
       .select((col("doc_id") +: extra.map(col)) :+
         round(log(s), 9).cast("decimal(28,9)").as("lp"): _*)
-  }
-
-  /** Persist a trained KN model under `dir` ([[saveLm]]'s deployment
-    * contract, one order of statistics richer): four cap-bounded frames
-    * plus the two scalars on a one-row meta table. */
-  def saveKn(lm: KneserNeyLm, dir: String): Unit = {
-    val spark = lm.vocab.sparkSession
-    import spark.implicits._
-    lm.vocab.coalesce(1).write.mode("overwrite").parquet(s"$dir/vocab")
-    lm.bigrams.coalesce(1).write.mode("overwrite").parquet(s"$dir/bigrams")
-    lm.ctx.coalesce(1).write.mode("overwrite").parquet(s"$dir/ctx")
-    lm.cont.coalesce(1).write.mode("overwrite").parquet(s"$dir/cont")
-    Seq((lm.bigramTypes, lm.vocabTypes)).toDF("bigram_types", "vocab_types")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Load a model persisted by [[saveKn]]; scoring against it is
-    * bit-identical to the in-memory original. */
-  def loadKn(spark: org.apache.spark.sql.SparkSession, dir: String): KneserNeyLm = {
-    val meta = spark.read.parquet(s"$dir/meta").head
-    KneserNeyLm(
-      spark.read.parquet(s"$dir/vocab"),
-      spark.read.parquet(s"$dir/bigrams"),
-      spark.read.parquet(s"$dir/ctx"),
-      spark.read.parquet(s"$dir/cont"),
-      bigramTypes = meta.getAs[Long]("bigram_types"),
-      vocabTypes = meta.getAs[Long]("vocab_types"))
   }
 }

@@ -73,16 +73,4 @@ object Layout {
       .withColumn(zCol, interleaveBits(buckets, bits))
       .drop(cols.indices.flatMap(i => Seq(s"__lo_$i", s"__hi_$i")): _*)
   }
-
-  /** Physically re-cluster `df` along the Z-curve of `cols`: range-
-    * partition into `numPartitions` output slices by z-value and sort
-    * within each, so every written file carries tight min/max ranges on
-    * ALL of `cols`. The helper column is dropped — the layout, not the
-    * value, is the product. */
-  def zOrder(df: DataFrame, cols: Seq[String], bits: Int,
-             numPartitions: Int): DataFrame =
-    withZValue(df, cols, bits, zCol = "__z")
-      .repartitionByRange(numPartitions, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
 }

@@ -351,15 +351,6 @@ object Multimodal {
       is_valid = true)
   }
 
-  /** STUB resize kernel for COMPRESSED formats (JPEG/PNG — the container
-    * has no codecs): keeps the payload and records the target dims in
-    * metadata. The un-stubbed counterpart for the codec-free raster format
-    * is [[resizePpm]], a real box-filter resample. */
-  def fakeResize(media: DataFrame, w: Int, h: Int): DataFrame =
-    media.withColumn("meta", struct(
-      col("meta.byte_len"), col("meta.sha256"), col("meta.source"),
-      lit(w).as("target_w"), lit(h).as("target_h")))
-
   private[graft] case class MediaMeta(byte_len: Long, sha256: String,
                                       source: String)
   private[graft] case class MediaRow(media_id: Long, kind: String,

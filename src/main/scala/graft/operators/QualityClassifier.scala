@@ -71,7 +71,7 @@ object QualityClassifier {
     * `cnt` reproduces per-token semantics exactly because every token in a
     * bucket carries the same model weight. cnt is decimal(10,0) so every
     * downstream weight×count product stays within decimal-38 exactness
-    * (see [[trainLogistic]]'s precision notes). */
+    * (see [[trainLogisticFold]]'s precision notes). */
   def tokenFold(docs: DataFrame, idCol: String, textCol: String,
                 buckets: Int = 4096, salt: String = ":bk1"): DataFrame =
     foldOf(tokenBuckets(docs, idCol, textCol, buckets, salt), buckets, salt)
@@ -344,26 +344,12 @@ object QualityClassifier {
     *    with `lrEff = lr / nDocs` computed by one double division of
     *    identical operands on any engine, re-rounded to 9 decimals.
     *
-    * Scale shape: ONE tokenization folds the corpus to the (doc, bucket,
-    * cnt) frame, persisted and reused by every iteration (margins pass +
-    * gradient pass) and by [[scoreLogistic]]; per-iteration cost is one
-    * broadcast join of the buckets-bounded weight frame and two partial
-    * aggs. Weights persist-swap per iteration (the PageRank loop shape) so
-    * the lineage never compounds. */
-  def trainLogistic(docs: DataFrame, idCol: String, textCol: String,
-                    label: Column, iters: Int = 3, lr: Double = 0.5,
-                    buckets: Int = 4096, salt: String = ":lg1"): LogitModel = {
-    val x = tokenFold(docs, idCol, textCol, buckets, salt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    x.count()
-    try trainLogisticFold(docs, idCol, label, x, iters, lr, buckets, salt)
-    finally x.unpersist(blocking = false)
-  }
-
-  /** [[trainLogistic]] over an externally-built (and ideally persisted)
-    * [[tokenFold]] frame — the caller keeps ownership of the fold, so one
-    * tokenization can feed this trainer, [[scoreLogisticFold]], AND the NB
-    * pair under the same salt (the bake-off's score-once shape). */
+    * `x` is an externally-built (and ideally persisted) [[tokenFold]]
+    * frame — the caller keeps ownership of the fold, so one tokenization
+    * can feed this trainer, [[scoreLogisticFold]], AND the NB pair under
+    * the same salt (the bake-off's score-once shape). Per-iteration cost is
+    * one broadcast join of the buckets-bounded weight frame and two
+    * partial aggs. */
   def trainLogisticFold(docs: DataFrame, idCol: String, label: Column,
                         x: DataFrame, iters: Int = 3, lr: Double = 0.5,
                         buckets: Int = 4096,
@@ -443,40 +429,12 @@ object QualityClassifier {
     LogitModel(w, bias, buckets, salt)
   }
 
-  /** Persist a trained [[LogitModel]] (train-once / score-many, the [[save]]
-    * contract): the buckets-bounded weight table plus one meta row. The
-    * bias is stored as the decimal(19,9) it already is, so the reloaded
-    * model scores bit-identically. */
-  def saveLogit(m: LogitModel, dir: String): Unit = {
-    val spark = m.w.sparkSession
-    m.w.coalesce(1).write.mode("overwrite").parquet(s"$dir/w")
-    spark.range(1).select(lit(m.bias).cast("decimal(19,9)").as("bias"),
-        lit(m.buckets).as("buckets"), lit(m.salt).as("salt"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Load a model persisted by [[saveLogit]]. */
-  def loadLogit(spark: org.apache.spark.sql.SparkSession,
-                dir: String): LogitModel = {
-    val meta = spark.read.parquet(s"$dir/meta").head
-    LogitModel(spark.read.parquet(s"$dir/w"),
-      meta.getAs[java.math.BigDecimal]("bias"),
-      meta.getAs[Int]("buckets"), meta.getAs[String]("salt"))
-  }
-
   /** Score every document under a trained [[LogitModel]]:
-    * (doc_id, n_tokens, margin, p, keep). Margins stay decimal-exact up to
-    * the final 6-decimal presentation round; `keep` is the rounded margin
-    * against zero (what a reader of the report would apply). Token-less
-    * documents score the bias alone. */
-  def scoreLogistic(docs: DataFrame, idCol: String, textCol: String,
-                    m: LogitModel): DataFrame =
-    scoreLogisticFold(docs, idCol,
-      tokenFold(docs, idCol, textCol, m.buckets, m.salt), m)
-
-  /** [[scoreLogistic]] over a shared [[tokenFold]] frame (must have been
-    * built under the model's buckets/salt) — behavior-identical, the
-    * per-token path IS this fold followed by the same joins. */
+    * (doc_id, n_tokens, margin, p, keep), over a shared [[tokenFold]] frame
+    * (must have been built under the model's buckets/salt). Margins stay
+    * decimal-exact up to the final 6-decimal presentation round; `keep` is
+    * the rounded margin against zero (what a reader of the report would
+    * apply). Token-less documents score the bias alone. */
   def scoreLogisticFold(docs: DataFrame, idCol: String, fold: DataFrame,
                         m: LogitModel): DataFrame = {
     assertFoldMatches(fold, m.buckets, m.salt, "scoreLogisticFold")

@@ -127,8 +127,7 @@ object Similarity {
     * Scale shape per round: the assignment is the broadcast-centroid
     * min_by (corpus scanned once, nothing corpus-sized shuffled); the mean
     * is a posexplode into (cell, pos) rows that partial-aggregate map-side
-    * before the (cells × dim)-bounded shuffle — the same shape as
-    * [[graft.operators.Centroids.meanByKey]]. The loop unrolls into the
+    * before the (cells × dim)-bounded shuffle. The loop unrolls into the
     * plan, so keep `iters` small (2-5) or checkpoint between rounds.
     *
     * Determinism: per-dimension values are rounded to 9 decimals and
@@ -300,11 +299,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Convenience: build + search in one call. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nLists: Int = 16, nProbe: Int = 2, seed: Long = 42L): DataFrame =
-    searchIvf(buildIvf(corpus, nLists, seed), queries, k, nProbe)
-
   private val ivfMemo = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String, Int, Long), IvfIndex]
 
@@ -366,7 +360,8 @@ object Similarity {
     * owns the contract that equal keys mean equal artifacts. Session-scoped
     * like [[sharedIvf]]: the memo dies with the process, every
     * bench/verify invocation rebuilds the fixture once, and stopped
-    * sessions are evicted on each lookup. */
+    * sessions are evicted on each lookup. A `build` that throws leaves no
+    * directory and no memo entry behind: the next call builds afresh. */
   def sharedSavedIndex(spark: SparkSession, variantKey: String)
                       (build: String => Unit): String =
     savedIndexMemo.synchronized {
@@ -374,7 +369,12 @@ object Similarity {
       savedIndexMemo.getOrElseUpdate((spark, variantKey), {
         val dir = java.nio.file.Files
           .createTempDirectory("graft_shared_idx").toString
-        build(dir)
+        try build(dir)
+        catch {
+          case e: Throwable =>
+            org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+            throw e
+        }
         dir
       })
     }
@@ -390,8 +390,8 @@ object Similarity {
     * halves are written sequentially, so overwriting a LIVE index risks
     * the mixed-halves state on a crash between them (new assignment + old
     * centroids probes the wrong cells silently). Publish-then-rename at
-    * the caller, or use the staged maintenance ops ([[retrainIvf]],
-    * [[compactIvf]], [[deleteFromIvf]]) to mutate an index in place. */
+    * the caller, or use the staged maintenance op [[retrainIvf]] to
+    * mutate an index in place. */
   def saveIvf(index: IvfIndex, dir: String): Unit = {
     index.assigned.write.mode("overwrite")
       .partitionBy("cell").parquet(s"$dir/assigned")
@@ -433,85 +433,6 @@ object Similarity {
     shaped.write.mode("append").partitionBy("cell").parquet(s"$dir/assigned")
   }
 
-  /** DELETE documents from a persisted index — the remaining index
-    * life-cycle op beside [[appendIvf]]/[[compactIvf]] (retention wipes,
-    * takedowns, re-ingest corrections). Eager, tombstone-free: the cells
-    * HOLDING deleted ids are found with a semi-join (a cell list, bounded
-    * by nLists — the one driver-side collect), ONLY those cells' surviving
-    * rows are rewritten (anti-join) through a temp-dir swap (a partitioned
-    * write cannot read its own target — the [[compactIvf]] contract), and
-    * a cell left empty simply has no replacement directory. Untouched
-    * cells' files are never opened or moved, so per-delete cost scales
-    * with the touched cells, not the index — asserted in SimilaritySpec,
-    * along with load-after-delete ≡ fresh assignment of the surviving
-    * corpus.
-    *
-    * Crash safety: nothing is DELETED until every touched cell has been
-    * swapped — each original cell dir is renamed ASIDE into the temp dir
-    * (`replaced__cell=N`) before its rewrite is renamed in, so a failure at
-    * any point leaves every row recoverable on disk. If a crashed run left
-    * `assigned__deleting` behind: finish by moving its remaining `cell=N`
-    * dirs into `assigned` (replacing any `replaced__` twin's slot), or roll
-    * back by moving the `replaced__cell=N` dirs back; then delete the temp
-    * dir and rerun. Like [[compactIvf]], the swap itself is maintenance
-    * that assumes a quiesced index (no concurrent readers mid-rename). */
-  def deleteFromIvf(spark: SparkSession, dir: String,
-                    deleteIds: DataFrame): Unit = {
-    val idCol = deleteIds.columns.head
-    val ids = deleteIds.select(col(idCol).as("nbr_id")).distinct()
-    val assigned = spark.read.parquet(s"$dir/assigned")
-    val touched = assigned
-      .join(ids.hint("shuffle_hash"), Seq("nbr_id"), "left_semi")
-      .select("cell").distinct().collect().map(_.get(0)).toSeq
-    if (touched.isEmpty) return
-    val tmp = s"$dir/assigned__deleting"
-    assigned.filter(col("cell").isin(touched: _*))
-      .join(ids, Seq("nbr_id"), "left_anti")
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(s"$dir/assigned"), spark.sparkContext.hadoopConfiguration)
-    val rewritten = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-      .map(_.getPath.getName).filter(_.startsWith("cell=")).toSet
-    touched.foreach { c =>
-      val cellDir = s"cell=$c"
-      // move the original ASIDE (never delete-first): both copies stay on
-      // disk until the temp dir is dropped at the end, so a crash anywhere
-      // in the loop loses nothing — see the recovery note in the scaladoc
-      fs.rename(new org.apache.hadoop.fs.Path(s"$dir/assigned/$cellDir"),
-        new org.apache.hadoop.fs.Path(s"$tmp/replaced__$cellDir"))
-      if (rewritten(cellDir))
-        fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/$cellDir"),
-          new org.apache.hadoop.fs.Path(s"$dir/assigned/$cellDir"))
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    // this session's file-status cache still lists the replaced files
-    spark.catalog.refreshByPath(s"$dir/assigned")
-  }
-
-  /** Compact an appended index layout: every [[appendIvf]] (or streaming
-    * [[graft.streaming.StreamingOps.ivfIngest]] micro-batch) adds files
-    * under the cells it touches, so a long-lived index accumulates many
-    * small files per cell — the classic streaming-ingest small-file
-    * problem, paid by every later probe as open/seek overhead. Compaction
-    * rewrites `dir/assigned` with one file per cell partition (coalesced
-    * inside each cell by the partitioned writer; rows unchanged — asserted
-    * in SimilaritySpec) via a temp-dir swap, since a partitioned overwrite
-    * cannot read its own input. Centroids are untouched. Run it on the
-    * cadence appends dictate; readers pick the compacted layout up on
-    * their next [[loadIvf]]. */
-  def compactIvf(spark: SparkSession, dir: String): Unit = {
-    val tmp = s"$dir/assigned__compacting"
-    spark.read.parquet(s"$dir/assigned")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/assigned")
-    fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-    spark.catalog.refreshByPath(s"$dir/assigned")
-  }
-
   /** CENTROID REFRESH for a persisted index — the lifecycle op that closes
     * the drift gap: [[appendIvf]] deliberately freezes the coarse
     * quantizer (retraining per batch would re-cell the corpus), so after
@@ -522,17 +443,17 @@ object Similarity {
     * re-assigns every stored vector to the new cells, and swaps BOTH
     * halves (assignment layout + centroid table) in together from one
     * staged temp root — they are only consistent as a pair — so
-    * [[appendIvf]]/[[deleteFromIvf]] keep composing against the refreshed
-    * `dir` unchanged and a crash at any point leaves a documented
-    * roll-forward/roll-back state (see the in-body recovery note).
+    * [[appendIvf]] keeps composing against the refreshed `dir` unchanged
+    * and a crash at any point leaves a documented roll-forward/roll-back
+    * state (see the in-body recovery note).
     *
     * A quantized index keeps its EXACT stored codes/scale — quantization
     * is per-vector and independent of cell, so re-celling moves rows
     * without a second rounding pass; the re-train sees the dequantized
     * vectors (what the index actually holds). Run it on the cadence drift
-    * dictates (e.g. when [[ivfRecallReport]] dips below target); like
-    * compaction it assumes a quiesced index, and readers pick the new
-    * cells up on their next [[loadIvf]].
+    * dictates (e.g. when probe recall dips below target); it assumes a
+    * quiesced index, and readers pick the new cells up on their next
+    * [[loadIvf]].
     *
     * Scale shape: one bounded-sample k-means fit + ONE assignment pass
     * over the stored corpus (broadcast centroids, min_by — the build
@@ -569,14 +490,14 @@ object Similarity {
       // CRASH CONSISTENCY: both halves are staged FULLY under one temp root
       // before any rename touches the live index, then swapped by four
       // metadata renames with the originals moved ASIDE (never deleted
-      // early) — the deleteFromIvf contract. The layouts must flip
+      // early). The layouts must flip
       // TOGETHER: new cells + old centroid table (or the reverse) is the
       // silent-row-loss state (probes never reach cells the centroid table
       // does not name). Recovery if a crashed run left `__retraining`
       // behind: roll FORWARD by moving its `assigned`/`centroids` dirs into
       // place (skipping any already moved — `old__*` presence marks those),
       // or roll BACK by restoring the `old__*` dirs; then delete the temp
-      // root and rerun. Like compactIvf, the swap assumes a quiesced index.
+      // root and rerun. The swap assumes a quiesced index.
       val tmpRoot = s"$dir/__retraining"
       reassigned.write.mode("overwrite").partitionBy("cell")
         .parquet(s"$tmpRoot/assigned")
@@ -824,125 +745,18 @@ object Similarity {
       coarse.select("fanout").head.getInt(0))
   }
 
-  /** [[appendIvf]] through the hierarchical assignment: the new batch
-    * lands under the frozen two-level quantizer with the same
-    * touched-cells-only dynamic partition append. */
-  def appendIvf2(i2: Ivf2Index, newBatch: DataFrame, dir: String): Unit = {
-    val assigned = assignCells2(Parallelism.fanOut(
-        newBatch.select(col("vec_id").as("nbr_id"), col("embedding").as("nbr_v"))),
-      i2.coarse, i2.index.centroids)
-    assigned.write.mode("append").partitionBy("cell").parquet(s"$dir/assigned")
-  }
-
-  /** [[retrainIvf]] for a TWO-LEVEL index: rebuild the hierarchical
-    * quantizer from the stored vectors and swap ALL THREE persisted parts
-    * (assignment layout, leaf centroid table, coarse parent table)
-    * together from one staged temp root — any two without the third is
-    * the silent-row-loss state (the hierarchical probe descends parents
-    * into leaves; a stale parent table names children that no longer
-    * exist). Same recovery contract as [[retrainIvf]]: a crashed run
-    * leaves `__retraining2` behind — roll forward by moving its part
-    * dirs into place (skipping ones already moved; `old__*` presence
-    * marks those), or roll back from the `old__*` dirs, then delete the
-    * temp root and rerun.
-    *
-    * Also the UPGRADE path: run against a dir saved by [[saveIvf]] (no
-    * `coarse`) to convert a flat index to two-level in place — the flat
-    * case simply has no coarse table to move aside. Coded indexes (int8
-    * OR PQ) keep their exact stored bytes, re-celled without a second
-    * rounding pass (the [[retrainIvf]] rule); a PQ layout re-trains on
-    * its reconstructions under the codebooks persisted beside it — which
-    * are exactly the vectors every probe scores. */
-  def retrainIvf2(spark: SparkSession, dir: String, nParents: Int = 4,
-                  fanout: Int = 4, seed: Long = 42L): Unit = {
-    requireNoStaleSwap(org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(dir), spark.sparkContext.hadoopConfiguration),
-      s"$dir/__retraining2")
-    val stored = spark.read.parquet(s"$dir/assigned")
-    val coded = storedIsCoded(stored)
-    val vecs = storedVectors(spark, dir, stored)
-    val fresh = buildIvf2(vecs.select(col("nbr_id").as("vec_id"),
-      col("nbr_v").as("embedding")), nParents, fanout, seed)
-    try {
-      val reassigned =
-        if (coded)
-          stored.drop("cell").join(
-            fresh.index.assigned.select("nbr_id", "cell").hint("shuffle_hash"),
-            Seq("nbr_id"))
-        else fresh.index.assigned
-      val tmpRoot = s"$dir/__retraining2"
-      reassigned.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$tmpRoot/assigned")
-      fresh.index.centroids.coalesce(1).write.mode("overwrite")
-        .parquet(s"$tmpRoot/centroids")
-      fresh.coarse.withColumn("fanout", lit(fresh.fanout))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmpRoot/coarse")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tmpRoot), spark.sparkContext.hadoopConfiguration)
-      def p(s: String) = new org.apache.hadoop.fs.Path(s)
-      mustRename(fs, p(s"$dir/assigned"), p(s"$tmpRoot/old__assigned"))
-      mustRename(fs, p(s"$tmpRoot/assigned"), p(s"$dir/assigned"))
-      mustRename(fs, p(s"$dir/centroids"), p(s"$tmpRoot/old__centroids"))
-      mustRename(fs, p(s"$tmpRoot/centroids"), p(s"$dir/centroids"))
-      if (fs.exists(p(s"$dir/coarse"))) // absent on the flat-upgrade path
-        mustRename(fs, p(s"$dir/coarse"), p(s"$tmpRoot/old__coarse"))
-      mustRename(fs, p(s"$tmpRoot/coarse"), p(s"$dir/coarse"))
-      fs.delete(p(tmpRoot), true)
-      spark.catalog.refreshByPath(s"$dir/assigned")
-      spark.catalog.refreshByPath(s"$dir/centroids")
-      spark.catalog.refreshByPath(s"$dir/coarse")
-    } finally fresh.index.assigned.unpersist(blocking = false)
-  }
-
   // ==================== product quantization (IVF+PQ) ====================
 
   /** Trained PQ codebooks: `m` subspaces of `dim / m` dims each, `nCodes`
     * codewords per subspace (≤ 256 so a code fits one biased byte).
     * `codebooks` is (subspace, code, codeword: array<double>) — any
-    * deterministic construction works (per-subspace k-means via [[trainPq]]
-    * in production; the oracle gate uses exact hash-bucket subvector means,
-    * the same swap [[Dedup.semanticDedup]] makes for its centroids). */
+    * deterministic construction works (the gates use exact hash-bucket
+    * subvector means, the same swap [[Dedup.semanticDedup]] makes for its
+    * centroids, so the oracle can reproduce them). */
   case class PqCodebooks(m: Int, dim: Int, nCodes: Int, codebooks: DataFrame) {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     require(nCodes <= 256, s"nCodes $nCodes exceeds one byte per code")
     def subDim: Int = dim / m
-  }
-
-  /** Train PQ codebooks: one k-means per subspace over a deterministic hash
-    * sample (same sampling/iteration discipline as [[buildIvf]]'s coarse
-    * quantizer — codebook quality needs subvector diversity, not the full
-    * corpus, and the m fits run on the SAME bounded sample). The driver
-    * loop is over m (≤ dozens), never over data. */
-  def trainPq(corpus: DataFrame, m: Int, nCodes: Int = 256,
-              seed: Long = 42L): PqCodebooks = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val c = Parallelism.fanOut(
-      corpus.select(col("vec_id").as("nbr_id"),
-        col("embedding").cast("array<double>").as("nbr_v")))
-    val dim = c.select(size(col("nbr_v"))).head.getInt(0)
-    val sub = dim / m
-    val n = c.count()
-    val targetRows = nCodes.toLong * 100L
-    val pct = math.min(100, math.max(1,
-      math.ceil(targetRows * 100.0 / math.max(n, 1L)).toInt))
-    val train = Sampling.sampleByHash(c, col("nbr_id"), pct, salt = s"pq$seed")
-      .select(col("nbr_v")).repartition(4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    train.count()
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val rows = (0 until m).flatMap { j =>
-      val model = new KMeans().setK(nCodes).setSeed(seed + j).setMaxIter(5)
-        .setInitMode("random")
-        .fit(train.select(
-          array_to_vector(slice(col("nbr_v"), j * sub + 1, sub)).as("features")))
-      model.clusterCenters.toIndexedSeq.zipWithIndex.map {
-        case (cent, i) => (j, i, cent.toArray.toSeq)
-      }
-    }
-    train.unpersist()
-    PqCodebooks(m, dim, nCodes, rows.toDF("subspace", "code", "codeword"))
   }
 
   /** Encode a built index's vectors to PQ codes: each subvector is assigned
@@ -1062,70 +876,6 @@ object Similarity {
     rankPqCandidates(pqReconStore(i2.index.assigned, pq), probed, k)
   }
 
-  /** [[appendIvfPq]] for a two-level index: the new batch descends the
-    * FROZEN hierarchical quantizer ([[assignCells2]]) and is encoded under
-    * the FROZEN codebooks, then appended into the same cell-partitioned
-    * layout — load-after-append is row-identical to a fresh encode of the
-    * unioned corpus (both are pure per-row functions of the frozen model
-    * frames; asserted in SimilaritySpec). */
-  def appendIvf2Pq(i2: Ivf2Index, pq: PqCodebooks, newBatch: DataFrame,
-                   dir: String): Unit = {
-    val fresh = IvfIndex(
-      assignCells2(Parallelism.fanOut(
-          newBatch.select(col("vec_id").as("nbr_id"), col("embedding").as("nbr_v"))),
-        i2.coarse, i2.index.centroids),
-      i2.index.centroids)
-    encodePq(fresh, pq).assigned
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/assigned")
-  }
-
-  /** [[searchIvfFiltered]] through the two-level probe: the attribute
-    * predicate evaluates in the candidate scan exactly as the flat path
-    * (one id-keyed attrs join against the store, independent of query
-    * count), only the cell-selection descends the hierarchy. At
-    * `probeParents = nParents` / `nProbe = nLists` the result is
-    * row-identical to the flat filtered search over the inner index
-    * (spec-pinned). */
-  def searchIvf2Filtered(i2: Ivf2Index, attrs: DataFrame, queries: DataFrame,
-                         k: Int, nProbe: Int, pred: Column,
-                         probeParents: Int = 0): DataFrame = {
-    graft.GraftExtensions.register(queries.sparkSession)
-    val pp = if (probeParents > 0) probeParents else nProbe / i2.fanout + 2
-    val probed = probeCells2(queries, i2, nProbe, pp)
-    rankPqCandidates(filteredStore(probeStore(i2.index), attrs, pred), probed, k)
-  }
-
-  /** [[ivfRecallReport]] for a two-level index — the tuning curve now has
-    * TWO axes (how many parents to descend, how many leaves to keep), so
-    * the report takes (probeParents, nProbe) budget pairs and lands one
-    * macro-averaged row per pair. Same scale shape: the exact pass is paid
-    * once for the whole curve (pinned into the caller's scope), each
-    * probed ranking is the hierarchical cell-pruned scan, and the driver
-    * loop is over budget pairs, never data. mean_recall is exactly 1.0 at
-    * the exhaustive pair (spec-pinned; non-exhaustive budgets are not
-    * totally ordered across BOTH axes, so only nested budgets are
-    * monotone). */
-  def ivf2RecallReport(i2: Ivf2Index, corpus: DataFrame, queries: DataFrame,
-                       k: Int, budgets: Seq[(Int, Int)],
-                       scope: graft.core.CacheScope.Handle =
-                         graft.core.CacheScope.detached): DataFrame = {
-    require(budgets.nonEmpty, "need at least one (probeParents, nProbe) budget")
-    val qrels = scope.pin(bruteForceTopK(corpus, queries, k)
-      .select(col("query_id"), col("nbr_id").as("doc_id"),
-        lit(1.0).as("rel"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    qrels.count()
-    val rows = budgets.map { case (pp, np) =>
-      RetrievalEval.summary(RetrievalEval.perQuery(
-          searchIvf2(i2, queries, k, np, pp), qrels, k))
-        .withColumn("probe_parents", lit(pp))
-        .withColumn("n_probe", lit(np))
-    }
-    rows.reduce(_ unionByName _)
-      .select("probe_parents", "n_probe", "n_queries", "n_evaluable",
-        "mean_recall", "mean_precision", "mean_mrr", "mean_ndcg")
-  }
-
   /** Persist trained PQ codebooks beside a [[saveIvf]] index — the
     * deployment needs both halves to probe (codes are meaningless without
     * their codebooks, exactly as cells are without centroids). The codebook
@@ -1147,24 +897,6 @@ object Similarity {
       .select("m", "dim", "n_codes").head
     PqCodebooks(meta.getInt(0), meta.getInt(1), meta.getInt(2),
       spark.read.parquet(s"$dir/codebooks"))
-  }
-
-  /** [[appendIvf]] for a PQ-coded index: the new batch is assigned under
-    * the FROZEN centroids and encoded under the FROZEN codebooks (neither
-    * retrains per ingest — retraining would re-cell / re-code the whole
-    * corpus), then appended into the same cell-partitioned layout. Load
-    * after append is row-identical to a fresh encode of the unioned corpus
-    * under the same centroids + codebooks (both are pure per-row functions
-    * of frozen model frames — asserted in SimilaritySpec). */
-  def appendIvfPq(index: IvfIndex, pq: PqCodebooks, newBatch: DataFrame,
-                  dir: String): Unit = {
-    val fresh = IvfIndex(
-      assignCells(Parallelism.fanOut(
-          newBatch.select(col("vec_id").as("nbr_id"), col("embedding").as("nbr_v"))),
-        index.centroids),
-      index.centroids)
-    encodePq(fresh, pq).assigned
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/assigned")
   }
 
   /** HARD-NEGATIVE mining for contrastive/retrieval training: each query's
@@ -1374,59 +1106,6 @@ object Similarity {
     val probed = probeCells(queries, index.centroids, nProbe)
     rankPqCandidates(
       filteredStore(pqReconStore(index.assigned, pq), attrs, pred), probed, k)
-  }
-
-  /** [[searchIvfPqFiltered]] through the two-level probe — all three
-    * levers at once (hierarchical assignment cost, m-byte storage,
-    * predicated retrieval). Only the cell selection descends the
-    * hierarchy; at `probeParents = nParents` / `nProbe = nLists` the
-    * result is row-identical to the flat PQ-filtered search over the
-    * inner index (spec-pinned). */
-  def searchIvf2PqFiltered(i2: Ivf2Index, pq: PqCodebooks, attrs: DataFrame,
-                           queries: DataFrame, k: Int, nProbe: Int,
-                           pred: Column, probeParents: Int = 0): DataFrame = {
-    graft.GraftExtensions.register(queries.sparkSession)
-    val pp = if (probeParents > 0) probeParents else nProbe / i2.fanout + 2
-    val probed = probeCells2(queries, i2, nProbe, pp)
-    rankPqCandidates(
-      filteredStore(pqReconStore(i2.index.assigned, pq), attrs, pred), probed, k)
-  }
-
-  /** Recall-vs-nProbe TUNING REPORT for a built index — the curve an
-    * operator reads to pick nProbe: for each probe depth, the index's
-    * ranking is scored against EXACT search via
-    * [[RetrievalEval.perQuery]] (qrels = the exact top-k, gain 1), and the
-    * macro-averaged metrics land one row per depth. Output:
-    * (n_probe, n_queries, n_evaluable, mean_recall, mean_precision,
-    * mean_mrr, mean_ndcg); mean_recall is non-decreasing in nProbe and
-    * exactly 1.0 at nProbe = nLists (candidate supersets can only improve
-    * agreement with the exact top-k — spec-pinned).
-    *
-    * Scale shape: ONE exact pass over the corpus builds the qrels (the
-    * expensive step, paid once for the whole curve); each probed ranking
-    * is the [[searchIvf]] cell-pruned scan, and every eval frame is
-    * (queries × k)-bounded. The driver loop is over probe DEPTHS (a
-    * handful), never over data. */
-  def ivfRecallReport(index: IvfIndex, corpus: DataFrame, queries: DataFrame,
-                      k: Int, nProbes: Seq[Int],
-                      scope: graft.core.CacheScope.Handle =
-                        graft.core.CacheScope.detached): DataFrame = {
-    require(nProbes.nonEmpty, "need at least one probe depth")
-    // the exact pass feeds every depth's eval: persist (pinned for the
-    // caller's release) and materialize before the per-depth fan-out
-    val qrels = scope.pin(bruteForceTopK(corpus, queries, k)
-      .select(col("query_id"), col("nbr_id").as("doc_id"),
-        lit(1.0).as("rel"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    qrels.count()
-    val rows = nProbes.map { np =>
-      RetrievalEval.summary(RetrievalEval.perQuery(
-          searchIvf(index, queries, k, np), qrels, k))
-        .withColumn("n_probe", lit(np))
-    }
-    rows.reduce(_ unionByName _)
-      .select("n_probe", "n_queries", "n_evaluable", "mean_recall",
-        "mean_precision", "mean_mrr", "mean_ndcg")
   }
 
   /** Bucketed ANN: neighbors are only searched inside the query's sign-LSH

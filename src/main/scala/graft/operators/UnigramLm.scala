@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 
@@ -186,12 +186,6 @@ object UnigramLm {
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), ModelSchema)
   }
-
-  /** Persist / load the trained model (the [[Bpe.saveMerges]] contract). */
-  def saveModel(model: DataFrame, dir: String): Unit =
-    model.coalesce(1).write.mode("overwrite").parquet(dir)
-  def loadModel(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
 
   /** Unknown-piece log-prob for Viterbi: below every trained piece, so a
     * fallback char is taken only when the vocab has no alternative (chars

@@ -20,13 +20,4 @@ object Windows {
       when(count(col(valueCol)).over(frame) === n,
         avg(col(valueCol)).over(frame)))
   }
-
-  /** W2 — centered 3-row moving average, shrinking at the edges
-    * (app.js:859-872). */
-  def centeredAvg3(df: DataFrame, orderCol: String, valueCol: String,
-                   outCol: String, partitionCols: Seq[String] = Nil): DataFrame = {
-    val base = if (partitionCols.isEmpty) Window.orderBy(orderCol)
-               else Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCol)
-    df.withColumn(outCol, avg(col(valueCol)).over(base.rowsBetween(-1, 1)))
-  }
 }

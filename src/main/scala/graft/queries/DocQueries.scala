@@ -88,7 +88,7 @@ object DocQueries {
   /** One unrolled batch-GD iteration for the logistic-filter oracle —
     * margins off w{t-1}/bias{t-1}, 9-decimal-rounded sigmoid errors, exact
     * decimal gradient sums, per-slot IEEE updates (mirrors
-    * QualityClassifier.trainLogistic step for step). */
+    * QualityClassifier.trainLogisticFold step for step). */
   private def logitIterCtes(t: Int): String = {
     val bp = if (t == 1) "CAST(0 AS DECIMAL(19,9))"
       else s"(SELECT v FROM bias${t - 1})"
@@ -426,9 +426,8 @@ object DocQueries {
     * subspaces x 16 codewords, each codeword the EXACT sequential-fold mean
     * (in vec_id order) of a hash-bucket of subvectors — the
     * q_dedup_semantic centroid trick lifted to subspaces, so both engines
-    * derive bit-identical codebooks without k-means. The k-means-trained
-    * path ([[graft.operators.Similarity.trainPq]]) is recall-bounded in
-    * SimilaritySpec. */
+    * derive bit-identical codebooks without k-means. SimilaritySpec
+    * recall-bounds k-means-trained codebooks. */
   private def deterministicPq(emb: DataFrame): Similarity.PqCodebooks = {
     import graft.operators.{Centroids, Dedup}
     val e = emb.select(col("vec_id"),
@@ -5188,9 +5187,7 @@ object DocQueries {
     // against their PQ reconstructions exactly as q_sim_topk_ivf_pq; at
     // nProbe = nLists the coarse cells cannot affect the result, so the
     // oracle is the SAME brute-force-over-reconstructions mirror with the
-    // label predicate on the candidate side. The two-level descent
-    // (searchIvf2PqFiltered) is row-identical at exhaustive budgets —
-    // spec-pinned in SimilaritySpec, not re-gated.
+    // label predicate on the candidate side.
     "q_sim_topk_ivf_pq_filtered" -> Q(
       (s, d) => {
         val emb = Tables.embeddings(s, d)
@@ -5848,8 +5845,7 @@ object DocQueries {
     // ---- Per-label centroids (mixture profiles): exact sequential-fold
     //      means of the first 4 dims, in vec_id order on both engines (plain
     //      double avg is partial-aggregation-order-dependent and would not
-    //      hash-match). The distributed fast path is Centroids.meanByKey;
-    //      OperatorsSpec asserts the two agree to 1e-9.
+    //      hash-match).
     // ---- Exact covariance (round 14): the sufficient statistic for the
     //      spectral diagnostics — round-9 decimal means and cell sums, so
     //      the dim(dim+1)/2 upper triangle is bit-reproducible under any

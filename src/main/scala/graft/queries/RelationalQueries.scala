@@ -490,8 +490,7 @@ object RelationalQueries {
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
         |ORDER BY user_id, ts, event_id""".stripMargin)),
 
-    // ---- T/streaming analog: tumbling 1-hour event-time windows (the batch
-    //      twin of streaming.StreamingOps.dailyRollup).
+    // ---- T/streaming analog: tumbling 1-hour event-time windows.
     "q_t_tumbling_hourly" -> Q(
       (s, d) => Tables.events(s, d)
         .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))

@@ -92,10 +92,10 @@ object Export {
     * rows of `schema` plus the `shard` column (recovered from the
     * `shard=N/` partition layout by the text source — no re-hashing).
     * Corrupt lines surface as all-null rows under PERMISSIVE parsing — and
-    * still occupy one line each, so [[validateShards]]'s row counts CANNOT
-    * see them; run [[validateShardsBytes]] (which also checks the
-    * manifest's byte totals and counts null required fields) before
-    * training on a re-read export. */
+    * still occupy one line each, so row counts CANNOT see them; run
+    * [[validateShardsBytes]] (which also checks the manifest's byte totals
+    * and counts null required fields) before training on a re-read
+    * export. */
   def readJsonlSharded(spark: org.apache.spark.sql.SparkSession, path: String,
                        schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.text(path)
@@ -103,30 +103,10 @@ object Export {
         from_json(col("value"), schema).as("row"))
       .select(col("shard"), col("row.*"))
 
-  /** Manifest validation: per-shard row counts of a re-read export vs the
-    * manifest [[jsonlSharded]] returned (or persisted). Returns
-    * (shard, expected_rows, actual_rows, ok) with a full-outer join so a
-    * MISSING shard directory and an UNEXPECTED extra shard both surface
-    * (expected/actual null-padded to 0). The check is one partial-agg count
-    * over the re-read frame against the shards-bounded manifest — the
-    * pre-flight a training job runs before touching the data. */
-  def validateShards(readBack: DataFrame, manifest: DataFrame): DataFrame = {
-    val actual = readBack.groupBy(col("shard").cast("long").as("shard"))
-      .agg(count(lit(1)).as("actual_rows"))
-    manifest.select(col("shard").cast("long").as("shard"),
-        col("n_rows").as("expected_rows"))
-      .join(actual, Seq("shard"), "full_outer")
-      .select(col("shard"),
-        coalesce(col("expected_rows"), lit(0L)).as("expected_rows"),
-        coalesce(col("actual_rows"), lit(0L)).as("actual_rows"))
-      .withColumn("ok", col("expected_rows") === col("actual_rows"))
-      .orderBy("shard")
-  }
-
-  /** FULL pre-flight — the validation [[validateShards]]'s row counts alone
-    * cannot give: a PERMISSIVE-corrupt JSON line still occupies one line,
-    * so per-shard counts match while the all-null row trains silently, and
-    * a truncated file can even keep its line count. This variant re-reads
+  /** FULL pre-flight — the validation row counts alone cannot give: a
+    * PERMISSIVE-corrupt JSON line still occupies one line, so per-shard
+    * counts match while the all-null row trains silently, and a truncated
+    * file can even keep its line count. This variant re-reads
     * the export RAW (one text scan, no second pass) and checks, per shard:
     *
     *  - row count vs the manifest's `n_rows`;

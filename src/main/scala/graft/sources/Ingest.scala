@@ -29,7 +29,7 @@ object Ingest {
     * underlying `java.net.http.HttpClient` pools connections. Driver-side
     * by design, like the seam it implements: ingest talks to one endpoint
     * per city, the distributed engine starts at the raw zone. Callers
-    * compose it with [[retry]] (or use [[fetchJson]], which does). */
+    * compose it with [[retry]]. */
   final class HttpFetcher(timeoutMs: Long = 10000,
                           userAgent: String = UserAgent) {
     private val client = java.net.http.HttpClient.newBuilder()
@@ -54,14 +54,6 @@ object Ingest {
       resp.body()
     }
   }
-
-  /** `_request_json` end to end (fetch.py:21-37): the real client wrapped
-    * in the retry/backoff schedule. `sleep` stays injectable for specs. */
-  def fetchJson(fetcher: HttpFetcher, url: String,
-                params: Seq[(String, String)] = Nil,
-                retries: Int = 3,
-                sleep: Long => Unit = Thread.sleep): String =
-    retry(retries = retries, sleep = sleep)(_ => fetcher.get(url, params))
 
   /** Run `f` (given the 1-based attempt number) with retry/backoff. `sleep`
     * is injectable so specs assert the delay schedule without waiting. */

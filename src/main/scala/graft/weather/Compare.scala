@@ -15,11 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Compare {
 
-  /** U1 — union of per-city frames, schema-aligned; missing columns become
-    * nulls (pd.concat semantics, web.py:558-561). */
-  def unionCities(frames: Seq[DataFrame]): DataFrame =
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
-
   /** J2 + A2 (web.py:478-507): daily weather frame left-joined with the
     * group-by-date mean of hourly air rows, tagged with the city literal. */
   def cityDaily(dailyWeather: DataFrame, hourlyAir: DataFrame, city: String): DataFrame = {
@@ -72,12 +67,5 @@ object Compare {
         col("next_avg").as("second_avg"),
         ((col("avg_value") - col("next_avg")) / abs(col("next_avg")) * 100.0)
           .as("pct_diff"))
-  }
-
-  /** A11 — the compare endpoint requires >= 2 cities with data
-    * (web.py:545-556); driver-side gate. */
-  def requireCities(df: DataFrame, minCities: Int = 2): Unit = {
-    val n = df.select("city").distinct().count()
-    require(n >= minCities, s"compare requires >=$minCities cities with data, got $n")
   }
 }

@@ -121,9 +121,8 @@ class WeatherServer(
     if (ok.size < 2)
       throw HttpError(500, "Not enough successful city data for comparison")
     // flattened rows: union of the per-city record arrays, in request order
-    // (pd.concat of the per-city frames, web.py:558-561) — the frames are
-    // schema-aligned by Compare.unionCities semantics; records here reuse
-    // the already-loaded per-city arrays so the union costs nothing.
+    // (pd.concat of the per-city frames, web.py:558-561); records here
+    // reuse the already-loaded per-city arrays so the union costs nothing.
     val merged = ok.flatten
     s"""{"cities": [${results.mkString(",")}], "count": ${merged.length}, """ +
       s""""days": $days, "data": [${merged.mkString(",")}], """ +

@@ -3,7 +3,6 @@ package graft.weather
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.functions.Slugify
 
@@ -66,48 +65,6 @@ object WeatherSources {
   def writeCsvCompat(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite)
       .option("header", "true").csv(path)
-
-  /** Size-aware compacting parquet write — the small-files guard: a shuffle-
-    * heavy job ends with as many files as shuffle partitions (tiny files ×
-    * thousands of jobs is the classic lakehouse pathology; every downstream
-    * scan then pays per-file open/footer costs). Target file count comes
-    * from Catalyst's size estimate for the plan, so callers don't hand-tune
-    * partition counts per dataset. Estimates are rough (pre-compression
-    * row-size arithmetic) — fine for a file-count decision. */
-  def writeCompacted(df: DataFrame, path: String,
-                     targetFileBytes: Long = 128L << 20,
-                     maxFiles: Int = 10000): Unit = {
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val unknown = BigInt(df.sparkSession.sessionState.conf.defaultSizeInBytes)
-    targetFileCount(estBytes, targetFileBytes, unknown, maxFiles) match {
-      // coalesce never increases partition count, so no need to inspect the
-      // current layout (which would instantiate the RDD lineage)
-      case Some(n) => df.coalesce(n).write.mode(SaveMode.Overwrite).parquet(path)
-      // size estimate is the no-stats sentinel: keep the current layout
-      // rather than coalescing on garbage
-      case None => df.write.mode(SaveMode.Overwrite).parquet(path)
-    }
-  }
-
-  /** File-count decision for [[writeCompacted]], clamped to [1, maxFiles];
-    * `None` when the estimate is the no-stats sentinel (>= the session's
-    * defaultSizeInBytes, i.e. "unknown" — relations without stats report
-    * Long.MaxValue, which would overflow a naive toInt into coalesce(0)). */
-  def targetFileCount(estBytes: BigInt, targetFileBytes: Long,
-                      unknownSentinel: BigInt, maxFiles: Int = 10000): Option[Int] = {
-    if (estBytes >= unknownSentinel) None
-    else Some((estBytes / targetFileBytes + 1).min(maxFiles).max(1).toInt)
-  }
-
-  /** S10 — CSV scan with date parsing and the reference's fallback-without-
-    * parsing behavior (web.py:25-34): columns that fail to parse stay
-    * strings rather than failing the read. */
-  def readCsv(spark: SparkSession, path: String, dateCols: Seq[String]): DataFrame = {
-    val df = spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-    dateCols.foldLeft(df) { (d, c) =>
-      if (d.columns.contains(c)) d.withColumn(c, col(c).cast("timestamp")) else d
-    }
-  }
 
   def slug(city: String): String = Slugify.slugify(city)
 }

@@ -103,10 +103,6 @@ class BpeSpec extends SparkSpec {
     assert(enc(2L).get(1).getSeq[String](1) == Seq("low", "est"))
     assert(enc(3L).isEmpty || enc(3L).get == null) // null text
     assert(enc(4L).get.isEmpty)                    // empty text
-    val n = Bpe.subtokenCount(docs, "doc_id", "text", merges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(n(4L) == 0L)
-    assert(n(2L) == enc(2L).get.map(_.getSeq[String](1).size).sum)
   }
 
   test("fertilityByGroup: exact counts, fertility falls as merges grow") {
@@ -123,9 +119,10 @@ class BpeSpec extends SparkSpec {
         (r.getAs[Long]("n_words"), r.getAs[Long]("n_subtokens"),
           r.getAs[Double]("fertility"))).toMap
     assert(rep("a")._1 == 8L && rep("b")._1 == 3L)
-    // counts agree with the per-doc operator
-    val perDoc = Bpe.subtokenCount(docs, "doc_id", "text", merges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // counts agree with the subtokens applyBpe emits per doc
+    val perDoc = Bpe.applyBpe(docs, "doc_id", "text", merges).collect()
+      .map(r => r.getLong(0) -> Option(r.getSeq[org.apache.spark.sql.Row](1))
+        .fold(0L)(_.map(_.getSeq[String](1).size.toLong).sum)).toMap
     assert(rep("a")._2 == perDoc(1L) + perDoc(2L))
     assert(rep("b")._2 == perDoc(3L) + perDoc(4L))
     // fertility >= 1 whenever words exist; empty docs contribute nothing
@@ -136,20 +133,5 @@ class BpeSpec extends SparkSpec {
       .collect().map(r => r.getAs[String]("source") ->
         r.getAs[Double]("fertility")).toMap
     assert(loose("a") > rep("a")._3 && loose("b") > rep("b")._3)
-  }
-
-  test("persisted merges encode identically to the in-memory table") {
-    import spark.implicits._
-    val docs = Seq((1L, "low lower lowest newest new"), (2L, "the newest low"))
-      .toDF("doc_id", "text")
-    val merges = Bpe.trainBpe(docs, "doc_id", "text", numMerges = 6)
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString + "/m"
-    Bpe.saveMerges(merges, dir)
-    val direct = Bpe.subtokenCount(docs, "doc_id", "text", merges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val loaded = Bpe.subtokenCount(docs, "doc_id", "text",
-        Bpe.loadMerges(spark, dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(direct == loaded)
   }
 }

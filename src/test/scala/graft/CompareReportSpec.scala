@@ -18,13 +18,6 @@ class CompareReportSpec extends SparkSpec {
     ("jakarta", Date.valueOf("2025-01-02"), 35.0, 5.0, 70.0))
     .toDF("city", "date", "temp_max", "total_rain", "pm25_avg")
 
-  test("unionCities aligns schemas, missing columns null (pd.concat)") {
-    val a = Seq(("a", 1.0)).toDF("city", "x")
-    val b = Seq(("b", 2.0, 3.0)).toDF("city", "x", "y")
-    val u = Compare.unionCities(Seq(a, b)).orderBy("city").collect()
-    assert(u.length == 2 && u(0).isNullAt(2) && u(1).getDouble(2) == 3.0)
-  }
-
   test("cityDaily left-joins daily air means onto weather days (web.py:478-507)") {
     val dailyWeather = Seq(
       (Date.valueOf("2025-01-01"), 30.0),
@@ -66,13 +59,6 @@ class CompareReportSpec extends SparkSpec {
     val sm = Compare.smooth(daily, "pm25_avg", "sm")
       .orderBy("city", "date").select("sm").as[Double].collect()
     assert(sm.toSeq == Seq(25.0, 25.0, 65.0, 65.0))
-  }
-
-  test("requireCities gates on distinct city count (web.py:545-556)") {
-    Compare.requireCities(daily, 2) // no throw
-    intercept[IllegalArgumentException] {
-      Compare.requireCities(daily.filter(col("city") === "bandung"), 2)
-    }
   }
 
   test("report summary: aggregates, argmax-first-tie, category, advice") {

@@ -150,45 +150,6 @@ class DiagnosticsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming drift monitor equals the batch surprise report on closed windows") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = Timestamp.valueOf(s)
-    val ref = Seq((1L, "a a b c d"), (2L, "a b b e f")).toDF("doc_id", "text")
-    val model = Diagnostics.surpriseModel(ref, "text", vocabSize = 4)
-    val rows = Seq(
-      (1L, ts("2025-01-01 00:00:00"), "web", "a a b zz"),
-      (2L, ts("2025-01-01 00:00:00"), "web", "c d a"),
-      (3L, ts("2025-01-01 00:00:00"), "odd", "zz yy xx"))
-    val mem = MemoryStream[(Long, Timestamp, String, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "source", "text")
-    val q = StreamingOps.driftMonitorStream(docs, "ts", "source", "text",
-        model, watermark = "10 minutes", windowDur = "1 hour")
-      .writeStream.format("memory").queryName("drift")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(rows: _*)
-      q.processAllAvailable()
-      mem.addData((99L, ts("2025-01-02 00:00:00"), "web", "a")) // close windows
-      q.processAllAvailable()
-      val stream = spark.sql(
-          "SELECT source, n_tokens, oov_rate, avg_nll FROM drift WHERE n_tokens > 1")
-        .collect().map(r => (r.getString(0), r.getLong(1),
-          r.getDouble(2), r.getDouble(3))).toSet
-      val batch = Diagnostics.surpriseBySource(
-          rows.toDF("doc_id", "ts", "source", "text"), "source", "text", model)
-        .collect().map(r => (r.getString(0), r.getLong(1),
-          r.getAs[Double]("oov_rate"), r.getAs[Double]("avg_nll"))).toSet
-      assert(stream == batch, s"stream $stream != batch $batch")
-      // the all-OOV source reads strictly more surprising than the in-vocab one
-      val byS = batch.map(x => x._1 -> x._4).toMap
-      assert(byS("odd") > byS("web"))
-    } finally q.stop()
-  }
-
   test("embedding drift: a source matching the global direction reads cos 1, an orthogonal one lower") {
     val docs = Seq((1L, "aligned"), (2L, "aligned"), (3L, "ortho"))
       .toDF("doc_id", "source")

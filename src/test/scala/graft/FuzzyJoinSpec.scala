@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.FuzzyJoin
@@ -9,6 +10,15 @@ import graft.operators.FuzzyJoin
   * (empty keys, threshold 0). */
 class FuzzyJoinSpec extends SparkSpec {
   import spark.implicits._
+
+  // unordered self-join pairs (id_a < id_b) under band / segment blocking
+  private def selfPairs(pairs: DataFrame) =
+    pairs.filter(col("id_l") < col("id_r"))
+      .select(col("id_l").as("id_a"), col("id_r").as("id_b"), col("dist"))
+  private def selfJoin(df: DataFrame, t: Int) =
+    selfPairs(FuzzyJoin.join(df, df, "id", "key", t))
+  private def selfJoinSegments(df: DataFrame, t: Int) =
+    selfPairs(FuzzyJoin.joinSegments(df, df, "id", "key", t))
 
   private def names = Seq(
     (1L, "jakarta"), (2L, "jakarta"), (3L, "jakartha"), (4L, "bandung"),
@@ -33,19 +43,8 @@ class FuzzyJoinSpec extends SparkSpec {
     assert(!got.exists { case (a, b, _) => Set(a, b) == Set(4L, 6L) })
   }
 
-  test("selfJoin emits each unordered pair once, id_a < id_b") {
-    val pairs = FuzzyJoin.selfJoin(names, "id", "key", 2)
-    val rows = pairs.select("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(rows.forall { case (a, b) => a < b })
-    assert(rows.distinct.length == rows.length)
-    // exact dups are dist 0
-    assert(pairs.filter(col("id_a") === 1 && col("id_b") === 2)
-      .head.getAs[Long]("dist") == 0L)
-  }
-
   test("threshold 0 degenerates to exact key equality") {
-    val got = FuzzyJoin.selfJoin(names, "id", "key", 0)
+    val got = selfJoin(names, 0)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSet == Set((1L, 2L)))
   }
@@ -62,10 +61,10 @@ class FuzzyJoinSpec extends SparkSpec {
       (14L, "aabcdefghz")
     ).toDF("id", "key")
     for (t <- 1 to 3) {
-      val seg = FuzzyJoin.selfJoinSegments(df, "id", "key", t)
+      val seg = selfJoinSegments(df, t)
         .select("id_a", "id_b", "dist").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val band = FuzzyJoin.selfJoin(df, "id", "key", t)
+      val band = selfJoin(df, t)
         .select("id_a", "id_b", "dist").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(seg == band, s"t=$t: segment ${seg.diff(band)} missing ${band.diff(seg)}")
@@ -79,9 +78,9 @@ class FuzzyJoinSpec extends SparkSpec {
       concat(lit("key"), (col("id") % 37).cast("string"),
         when(col("id") % 5 === 0, lit("x")).otherwise(lit("")),
         when(col("id") % 7 === 0, lit("qz")).otherwise(lit(""))).as("key"))
-    val seg = FuzzyJoin.selfJoinSegments(base, "id", "key", 2)
+    val seg = selfJoinSegments(base, 2)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val band = FuzzyJoin.selfJoin(base, "id", "key", 2)
+    val band = selfJoin(base, 2)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(seg == band, s"missing=${band.diff(seg).take(5)} extra=${seg.diff(band).take(5)}")
     assert(seg.nonEmpty)
@@ -106,7 +105,7 @@ class FuzzyJoinSpec extends SparkSpec {
 
   test("empty keys band-match each other and nothing longer than maxDist") {
     val df = Seq((1L, ""), (2L, ""), (3L, "ab"), (4L, "abc")).toDF("id", "key")
-    val got = FuzzyJoin.selfJoin(df, "id", "key", 2)
+    val got = selfJoin(df, 2)
       .select("id_a", "id_b", "dist").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // "" vs "" dist 0; "" vs "ab" dist 2; "" vs "abc" dist 3 excluded

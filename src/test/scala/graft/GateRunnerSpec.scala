@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.core.CacheScope
 import graft.queries.Q
 
@@ -87,6 +89,42 @@ class GateRunnerSpec extends SparkSpec {
     assert(t.seconds.size == 2)
     assert(t.failures.map(_.getMessage) == Seq.fill(3)(Seq("prewarm", "run")).flatten)
     assert(GateRunner.sweep(spark).isEmpty)
+  }
+
+  test("measure names each run's jobs by gate and phase, then clears the group") {
+    GateRunner.sweep(spark)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some("spec#marker") => drained.countDown()
+          case Some(g) => groups.add(g)
+          case None => // another thread's job
+        }
+    }
+    // a one-job prewarm; two jobs inside the gate, then the sink's
+    val twoJobs = Q((s, _) => {
+      sc.parallelize(1 to 4, 2).count()
+      sc.parallelize(1 to 4, 2).count()
+      s.range(4).toDF("id")
+    }, prewarm = Some((_, _) => { sc.parallelize(1 to 2, 1).count(); () }))
+    sc.addSparkListener(listener)
+    try {
+      val t = GateRunner.measure(spark, "two-jobs", twoJobs, "unused", "spec")
+      assert(t.failures.isEmpty)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+      sc.setJobGroup("spec#marker", "spec#marker")
+      spark.range(1).collect()
+      sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val byGroup = groups.asScala.toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    assert(byGroup.keySet == Set("two-jobs#prewarm", "two-jobs#warm", "two-jobs#timed"), byGroup)
+    assert(byGroup("two-jobs#prewarm") == 2, byGroup) // before the warm and the timed run
+    assert(byGroup("two-jobs#warm") >= 2 && byGroup("two-jobs#warm") == byGroup("two-jobs#timed"),
+      byGroup)
   }
 
   test("the gate selection matches any comma-separated substring") {

@@ -285,28 +285,4 @@ class LanguageModelSpec extends SparkSpec {
     assert(ppl("q b") < ppl("q c"),
       s"continuation-frequent token must score better: b=${ppl("q b")} c=${ppl("q c")}")
   }
-
-  test("persisted LM scores bit-identically to the in-memory one") {
-    import spark.implicits._
-    val lm = LanguageModel.trainBigramLm(refDocs, "doc_id", "text",
-      vocabCap = 8, bigramCap = 32)
-    val dir = java.nio.file.Files.createTempDirectory("lm").toString + "/m"
-    LanguageModel.saveLm(lm, dir)
-    val docs = Seq((10L, "a b c d"), (11L, "d a b")).toDF("doc_id", "text")
-    def scored(m: LanguageModel.BigramLm) =
-      LanguageModel.perplexity(docs, "doc_id", "text", m)
-        .collect().map(r => (r.getLong(0), r.getAs[Double]("avg_logp"),
-          r.getAs[Double]("ppl"))).toSet
-    assert(scored(lm) == scored(LanguageModel.loadLm(spark, dir)))
-    // same contract for the KN order
-    val kn = LanguageModel.trainKneserNey(refDocs, "doc_id", "text",
-      vocabCap = 8, bigramCap = 32)
-    val knDir = java.nio.file.Files.createTempDirectory("kn").toString + "/m"
-    LanguageModel.saveKn(kn, knDir)
-    def scoredKn(m: LanguageModel.KneserNeyLm) =
-      LanguageModel.perplexityKneserNey(docs, "doc_id", "text", m)
-        .collect().map(r => (r.getLong(0), r.getAs[Double]("avg_logp"),
-          r.getAs[Double]("ppl"))).toSet
-    assert(scoredKn(kn) == scoredKn(LanguageModel.loadKn(spark, knDir)))
-  }
 }

@@ -26,8 +26,25 @@ class ModelSpec extends SparkSpec {
     val (w, a) = raws
     val hours = Model.hourly(WeatherTransform.hourly(w, a)).collect()
     assert(hours.length == 3 && hours.forall(_.rh.isEmpty)) // field absent in fixture
-    val alerts = Model.dailyAlerts(
-      WeatherTransform.withAlertFlags(WeatherTransform.daily(w, a))).collect()
+    import spark.implicits._
+    val alerts = WeatherTransform.withAlertFlags(WeatherTransform.daily(w, a))
+      .as[ModelSpec.DailyAlerts].collect()
     assert(alerts.exists(_.is_unhealthy_pm25.contains(true)))
   }
+}
+
+object ModelSpec {
+
+  /** Daily plus the derived alert flags, as `WeatherCli` writes them. */
+  case class DailyAlerts(
+      date: Option[java.sql.Date],
+      temp_min: Option[Double],
+      temp_max: Option[Double],
+      total_rain: Option[Double],
+      pm25_avg: Option[Double],
+      pm10_avg: Option[Double],
+      pm25_category: String,
+      is_hot_day: Option[Boolean],
+      is_heavy_rain: Option[Boolean],
+      is_unhealthy_pm25: Option[Boolean])
 }

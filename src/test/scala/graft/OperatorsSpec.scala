@@ -57,13 +57,6 @@ class OperatorsSpec extends SparkSpec {
     assert(out(2).getDouble(0) == 2.0 && out(4).getDouble(0) == 4.0)
   }
 
-  test("centered 3-row average shrinks at the edges (app.js:859-872)") {
-    val df = Seq((1, 1.0), (2, 2.0), (3, 6.0)).toDF("ord", "v")
-    val out = Windows.centeredAvg3(df, "ord", "v", "ma")
-      .orderBy("ord").select("ma").as[Double].collect()
-    assert(out.toSeq == Seq(1.5, 3.0, 4.0))
-  }
-
   test("exact dedup: keeper is lowest id per content group") {
     val docs = Seq((1L, "aaa"), (2L, "bbb"), (3L, "aaa")).toDF("id", "text")
     val out = Dedup.exact(docs, "id", "text").orderBy("id").collect()
@@ -892,34 +885,6 @@ class OperatorsSpec extends SparkSpec {
     assert(z == 27L)
   }
 
-  test("z-order layout bounds per-partition ranges on BOTH dims; single-key sort does not") {
-    import graft.operators.Layout
-    val li = graft.core.Tables.lineitem(spark, "/root/testdata/sf0.01")
-      .select("l_partkey", "l_suppkey")
-    val Seq(lo0, hi0, lo1, hi1) = li
-      .agg(min("l_partkey"), max("l_partkey"), min("l_suppkey"), max("l_suppkey"))
-      .collect().head.toSeq.map(_.asInstanceOf[Long].toDouble)
-    def avgSpans(df: org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val parts = df.groupBy(spark_partition_id().as("p"))
-        .agg(min("l_partkey").as("a0"), max("l_partkey").as("a1"),
-          min("l_suppkey").as("b0"), max("l_suppkey").as("b1"))
-        .collect()
-      val s0 = parts.map(r => (r.getAs[Long]("a1") - r.getAs[Long]("a0")) / (hi0 - lo0))
-      val s1 = parts.map(r => (r.getAs[Long]("b1") - r.getAs[Long]("b0")) / (hi1 - lo1))
-      (s0.sum / s0.length, s1.sum / s1.length)
-    }
-    val (za, zb) = avgSpans(Layout.zOrder(li, Seq("l_partkey", "l_suppkey"),
-      bits = 8, numPartitions = 16))
-    val (sa, sb) = avgSpans(
-      li.repartitionByRange(16, col("l_partkey")).sortWithinPartitions("l_partkey"))
-    // lexicographic layout: first key prunes tightly, second key spans the world
-    assert(sa < 0.3, s"sorted layout first-key span $sa")
-    assert(sb > 0.9, s"sorted layout second-key span $sb")
-    // z-order: BOTH keys' per-partition ranges are bounded fractions
-    assert(za < 0.7, s"z-order partkey span $za")
-    assert(zb < 0.7, s"z-order suppkey span $zb")
-  }
-
   test("blocklistFlags counts repeated hits, case-folds terms, and leaves clean docs at zero") {
     import graft.operators.Curation
     val docs = Seq(
@@ -1006,11 +971,6 @@ class OperatorsSpec extends SparkSpec {
         x.getAs[Boolean]("is_contaminated"))).toSeq
     assert(r == Seq((1L, 100L, 1.0, true), (2L, 101L, 1.0, true),
       (3L, 101L, 0.8, false)))
-    // clean drops exactly the flagged ids
-    val kept = Decontaminate.semanticClean(corpus, "vec_id", "embedding",
-        bench, "vec_id", "embedding", threshold = 0.95)
-      .orderBy("vec_id").collect().map(_.getAs[Long]("vec_id")).toSeq
-    assert(kept == Seq(3L))
   }
 
   test("semanticFlagsIvf at full probe equals semanticFlags") {
@@ -1732,7 +1692,7 @@ class OperatorsSpec extends SparkSpec {
       ("2024-01-08", 1) -> ((1L, 1L, 1.0))))
   }
 
-  test("lshRecallReport: exact-dup truth recovered at every config; cost counted") {
+  test("lshRecallMatrix: exact-dup truth recovered at every config; cost counted") {
     import graft.operators.Dedup
     import spark.implicits._
     // two identical pairs (jaccard 1.0) + unrelated docs: at threshold
@@ -1746,7 +1706,7 @@ class OperatorsSpec extends SparkSpec {
       (5L, "one two three four five six seven eight nine ten"),
       (6L, "completely different words in this document entirely"))
       .toDF("doc_id", "text")
-    val r = Dedup.lshRecallReport(docs, "doc_id", "text",
+    val r = Dedup.lshRecallMatrix(docs, "doc_id", "text",
         threshold = 0.99, configs = Seq((32, 4), (32, 8), (32, 16)))
       .orderBy("rows_per_band").collect()
     assert(r.length == 3)
@@ -1758,7 +1718,7 @@ class OperatorsSpec extends SparkSpec {
       assert(row.getAs[Int]("n_bands") == 32 / row.getAs[Int]("rows_per_band"))
     }
     // empty truth -> recall undefined (null), not a division blowup
-    val none = Dedup.lshRecallReport(docs, "doc_id", "text",
+    val none = Dedup.lshRecallMatrix(docs, "doc_id", "text",
         threshold = 0.99, configs = Seq((32, 4)),
         tokens = t => array_distinct(graft.functions.TextFunctions.shingles(t, 8)))
       .collect().head
@@ -1766,7 +1726,7 @@ class OperatorsSpec extends SparkSpec {
     // docs still do; just pin the shape contract on whatever truth exists
     assert(none.getAs[Long]("n_candidates") >= 0L)
     intercept[IllegalArgumentException] {
-      Dedup.lshRecallReport(docs, "doc_id", "text", 0.5, Seq((32, 5)))
+      Dedup.lshRecallMatrix(docs, "doc_id", "text", 0.5, Seq((32, 5)))
     }
   }
 

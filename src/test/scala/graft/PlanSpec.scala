@@ -725,21 +725,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!p.contains("Window"), s"corpus window in the mean stage:\n$p")
   }
 
-  test("z-order pays exactly one corpus shuffle: the range repartition") {
-    import graft.operators.Layout
-    val li = Tables.lineitem(spark, sf)
-    val p = planOf(Layout.zOrder(li, Seq("l_partkey", "l_suppkey"),
-      bits = 8, numPartitions = 8))
-    assert(p.toLowerCase.contains("rangepartitioning"),
-      s"re-layout lost its range partition:\n$p")
-    assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"),
-      s"unexpected join in the layout plan:\n$p")
-    // bounds come from ONE aggregation: a single-row broadcast, so the only
-    // exchanges are the stats singleton and the range repartition itself
-    val exchanges = p.linesIterator.filter(_.contains("Exchange")).size
-    assert(exchanges <= 3, s"too many exchanges ($exchanges):\n$p")
-  }
-
   test("semanticDedup pairs join shuffled on cell, never cartesian") {
     import graft.operators.Dedup
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -844,7 +829,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("PQ-filtered ANN: predicate below the rank window, codebooks broadcast, no cartesian on data") {
     val emb = Tables.embeddings(spark, sf)
     val index = Similarity.buildIvf(emb, nLists = 4)
-    val pq = Similarity.trainPq(emb, m = 16, nCodes = 16, seed = 3L)
+    val pq = PqTraining.trainPq(emb, m = 16, nCodes = 16, seed = 3L)
     try {
       val p = planOf(Similarity.searchIvfPqFiltered(
         Similarity.encodePq(index, pq), pq,

@@ -126,6 +126,19 @@ class QualityClassifierSpec extends SparkSpec {
     }
   }
 
+  // the logistic trainer and scorer over one tokenFold of `docs`
+  private val lgSalt = ":lg1"
+  private def trainLogistic(docs: org.apache.spark.sql.DataFrame,
+                            label: org.apache.spark.sql.Column, iters: Int,
+                            buckets: Int) =
+    QualityClassifier.trainLogisticFold(docs, "doc_id", label,
+      QualityClassifier.tokenFold(docs, "doc_id", "text", buckets, lgSalt),
+      iters, lr = 0.5, buckets, lgSalt)
+  private def scoreLogistic(docs: org.apache.spark.sql.DataFrame,
+                            m: QualityClassifier.LogitModel) =
+    QualityClassifier.scoreLogisticFold(docs, "doc_id",
+      QualityClassifier.tokenFold(docs, "doc_id", "text", m.buckets, m.salt), m)
+
   test("logistic GD: one hand-computed iteration; margins, p, prior-only docs") {
     import spark.implicits._
     // d1 = "aa aa" (positive), d2 = "bb" (negative); with lr=0.5 over n=2
@@ -133,10 +146,9 @@ class QualityClassifierSpec extends SparkSpec {
     // grad(aa)=2*0.5=1.0, grad(bb)=-0.5, grad(bias)=0 ->
     // w(aa)=0.25, w(bb)=-0.125, bias=0.
     val docs = Seq((1L, "aa aa"), (2L, "bb")).toDF("doc_id", "text")
-    val m1 = QualityClassifier.trainLogistic(docs, "doc_id", "text",
-      label = col("doc_id") === 1L, iters = 1, lr = 0.5, buckets = 4096)
+    val m1 = trainLogistic(docs, col("doc_id") === 1L, iters = 1, buckets = 4096)
     assert(m1.bias.doubleValue == 0.0)
-    val s1 = QualityClassifier.scoreLogistic(docs, "doc_id", "text", m1)
+    val s1 = scoreLogistic(docs, m1)
       .orderBy("doc_id").collect()
     assert(s1(0).getAs[Double]("margin") == 0.5)    // 2 * 0.25
     assert(s1(0).getAs[Long]("n_tokens") == 2L)
@@ -148,9 +160,7 @@ class QualityClassifierSpec extends SparkSpec {
       BigDecimal(1.0 / (1.0 + math.exp(-0.5)))
         .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
     // unseen tokens score the bias alone; empty text keeps n_tokens = 0
-    val s1u = QualityClassifier.scoreLogistic(
-        Seq((9L, "zz zz"), (10L, "")).toDF("doc_id", "text"), "doc_id",
-        "text", m1)
+    val s1u = scoreLogistic(Seq((9L, "zz zz"), (10L, "")).toDF("doc_id", "text"), m1)
       .orderBy("doc_id").collect()
     assert(s1u(0).getAs[Double]("margin") == 0.0)
     assert(s1u(1).getAs[Long]("n_tokens") == 0L)
@@ -163,33 +173,15 @@ class QualityClassifierSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val lab = col("doc_id") % 2 === 0
     def margins(iters: Int): Map[Long, Double] =
-      QualityClassifier.scoreLogistic(docs, "doc_id", "text",
-          QualityClassifier.trainLogistic(docs, "doc_id", "text", lab,
-            iters = iters, lr = 0.5, buckets = 4096))
+      scoreLogistic(docs, trainLogistic(docs, lab, iters, buckets = 4096))
         .collect().map(r => r.getLong(0) -> r.getAs[Double]("margin")).toMap
     val m1 = margins(1); val m3 = margins(3)
     // every positive doc's margin grows, every negative's shrinks
     assert((2L to 30L by 2).forall(i => m3(i) > m1(i) && m3(i) > 0))
     assert((1L to 29L by 2).forall(i => m3(i) < m1(i) && m3(i) < 0))
     // the weight frame is buckets-bounded (distinct tokens here: 7)
-    val mdl = QualityClassifier.trainLogistic(docs, "doc_id", "text", lab,
-      iters = 2, lr = 0.5, buckets = 4096)
+    val mdl = trainLogistic(docs, lab, iters = 2, buckets = 4096)
     assert(mdl.w.count() <= 7L)
-    // save -> load -> score is bit-identical (train-once / score-many)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_logit").toString
-    try {
-      QualityClassifier.saveLogit(mdl, dir)
-      val re = QualityClassifier.loadLogit(spark, dir)
-      assert(re.bias == mdl.bias && re.buckets == mdl.buckets &&
-        re.salt == mdl.salt)
-      val a = QualityClassifier.scoreLogistic(docs, "doc_id", "text", mdl)
-        .orderBy("doc_id").collect().toSeq
-      val b = QualityClassifier.scoreLogistic(docs, "doc_id", "text", re)
-        .orderBy("doc_id").collect().toSeq
-      assert(a == b)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(dir))
   }
 
   test("shared tokenFold path is bit-identical to the per-token path") {
@@ -214,17 +206,5 @@ class QualityClassifierSpec extends SparkSpec {
         r.getAs[Long]("n_tokens"), r.getAs[Double]("log_odds"))).toSeq
     assert(rows(QualityClassifier.score(docs, "doc_id", "text", mA)) ==
       rows(QualityClassifier.scoreFold(docs, "doc_id", fold, mB)))
-    // logistic: fold trainer + fold scorer vs the tokenizing wrappers
-    val lA = QualityClassifier.trainLogistic(docs, "doc_id", "text", label,
-      iters = 2, lr = 0.5, buckets = 256, salt = ":t")
-    val lB = QualityClassifier.trainLogisticFold(docs, "doc_id", label, fold,
-      iters = 2, lr = 0.5, buckets = 256, salt = ":t")
-    assert(lA.bias == lB.bias)
-    def lrows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect().map(r => (r.getLong(0),
-        r.getAs[Long]("n_tokens"), r.getAs[Double]("margin"),
-        r.getAs[Double]("p"))).toSeq
-    assert(lrows(QualityClassifier.scoreLogistic(docs, "doc_id", "text", lA))
-      == lrows(QualityClassifier.scoreLogisticFold(docs, "doc_id", fold, lB)))
   }
 }

@@ -18,11 +18,12 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "nbr_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = resultSet(Similarity.bruteForceTopK(emb, queries, k))
-    val ivf = resultSet(Similarity.ivfTopK(emb, queries, k, nLists = 16, nProbe = 4))
+    val index = Similarity.buildIvf(emb, nLists = 16)
+    val ivf = resultSet(Similarity.searchIvf(index, queries, k, nProbe = 4))
     val recall = (exact intersect ivf).size.toDouble / exact.size
     assert(recall >= 0.5, s"IVF recall too low: $recall")
     // probing every cell must recover exact search entirely
-    val full = resultSet(Similarity.ivfTopK(emb, queries, k, nLists = 16, nProbe = 16))
+    val full = resultSet(Similarity.searchIvf(index, queries, k, nProbe = 16))
     assert(full == exact, "nProbe = nLists should equal brute force")
   }
 
@@ -34,7 +35,7 @@ class SimilaritySpec extends SparkSpec {
     // over 64 dims -> 16 bytes/vector vs 512 for float64; the synthetic
     // embeddings are near-uniform, the hardest case for PQ, so the spec
     // uses the finer 4-dim subspaces a random-ish corpus needs)
-    val pq = Similarity.trainPq(emb, m = 16, nCodes = 64, seed = 7L)
+    val pq = PqTraining.trainPq(emb, m = 16, nCodes = 64, seed = 7L)
     assert(pq.subDim == 4)
     val cbRows = pq.codebooks.collect()
     assert(cbRows.length == 16 * 64)
@@ -71,12 +72,11 @@ class SimilaritySpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("PQ index + codebooks persist, append with frozen models, and shrink the store") {
+  test("PQ index + codebooks persist and shrink the store") {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 4)
     val base = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    val pq = Similarity.trainPq(base, m = 16, nCodes = 32, seed = 11L)
+    val pq = PqTraining.trainPq(base, m = 16, nCodes = 32, seed = 11L)
     val built = Similarity.buildIvf(base, nLists = 8, seed = 42L)
     val coded = Similarity.encodePq(built, pq)
     val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
@@ -99,20 +99,6 @@ class SimilaritySpec extends SparkSpec {
         .orderBy("query_id", "rank").collect()
       assert(a.toSeq == b.toSeq)
       assert(a.nonEmpty)
-      // frozen-model append: load-after-append == fresh encode of the union
-      Similarity.appendIvfPq(coded, pq, batch, dir)
-      val after = Similarity.loadIvf(spark, dir).assigned
-        .select("nbr_id", "pq_codes", "cell").collect()
-        .map(r => (r.getLong(0), r.getSeq[Byte](1).toSeq,
-          r.getAs[Number]("cell").longValue)).toSet
-      val freshUnion = Similarity.encodePq(
-          Similarity.IvfIndex(Similarity.assignCells(
-            graft.core.Parallelism.fanOut(emb.select(col("vec_id").as("nbr_id"),
-              col("embedding").as("nbr_v"))), built.centroids), built.centroids), pq)
-        .assigned.select("nbr_id", "pq_codes", "cell").collect()
-        .map(r => (r.getLong(0), r.getSeq[Byte](1).toSeq,
-          r.getAs[Number]("cell").longValue)).toSet
-      assert(after == freshUnion, "append diverged from fresh union encode")
       // the compression story, measured on disk over the SAME rows and the
       // SAME layout (one unpartitioned file each): PQ codes (m bytes/vector)
       // vs int8 (dim bytes + scale) vs raw float vectors
@@ -134,6 +120,32 @@ class SimilaritySpec extends SparkSpec {
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
+  }
+
+  test("a throwing sharedSavedIndex build leaves no temp dir, and the key builds again") {
+    val key = s"throwing-build-${System.nanoTime()}"
+    var failedDir: String = null
+    val e = intercept[IllegalStateException] {
+      Similarity.sharedSavedIndex(spark, key) { dir =>
+        failedDir = dir
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "part"), "x")
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(e.getMessage == "build failed")
+    assert(failedDir != null && !new java.io.File(failedDir).exists(),
+      s"$failedDir left behind")
+    var builds = 0
+    val dir = Similarity.sharedSavedIndex(spark, key) { d =>
+      builds += 1
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(d, "part"), "ok")
+    }
+    try {
+      assert(builds == 1)
+      assert(java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "part")) == "ok")
+      assert(Similarity.sharedSavedIndex(spark, key)(_ => builds += 1) == dir)
+      assert(builds == 1)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("hard negatives exclude the query's duplicate component, not its near misses") {
@@ -254,66 +266,6 @@ class SimilaritySpec extends SparkSpec {
       assert(idx.assigned.count() == 500)
       assert(search.count() > 0)
     } finally idx.assigned.unpersist()
-  }
-
-  test("deleteFromIvf rewrites only touched cells; emptied cells vanish; search forgets the rows") {
-    val emb = Tables.embeddings(spark, sf)
-    val base = emb.filter(col("vec_id") < 400)
-    val built = Similarity.buildIvf(base, nLists = 8, seed = 42L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
-    try {
-      Similarity.saveIvf(built, dir)
-      def filesPerCell: Map[String, Set[String]] =
-        new java.io.File(s"$dir/assigned").listFiles()
-          .filter(_.getName.startsWith("cell=")).map { d =>
-            d.getName -> d.listFiles().map(_.getName).toSet
-          }.toMap
-      val before = filesPerCell
-      // delete every row of one cell (it must vanish) plus a few rows of
-      // whatever cells they live in
-      val assigned = Similarity.loadIvf(spark, dir).assigned
-      val victimCell = assigned.groupBy("cell").count()
-        .orderBy("count", "cell").collect()(0).get(0)
-      val wholeCell = assigned.filter(col("cell") === victimCell)
-        .select(col("nbr_id")).collect().map(_.getLong(0)).toSet
-      val extra = Set(1L, 2L, 3L) -- wholeCell
-      val delIds = (wholeCell ++ extra).toSeq
-      val touched = assigned // materialized BEFORE the files move underneath
-        .filter(col("nbr_id").isin(delIds: _*))
-        .select("cell").distinct().collect().map(r => s"cell=${r.get(0)}").toSet
-      val s2 = spark
-      import s2.implicits._
-      Similarity.deleteFromIvf(spark, dir, delIds.toDF("vec_id"))
-      val after = filesPerCell
-      // the emptied cell's directory is gone
-      assert(!after.contains(s"cell=$victimCell"),
-        s"emptied cell=$victimCell still present: ${after.keySet}")
-      val untouched = before.keySet -- touched
-      assert(untouched.forall(c => before(c) == after(c)),
-        s"files changed outside touched cells $touched")
-      // load-after-delete ≡ fresh assignment of the surviving corpus
-      val loaded = Similarity.loadIvf(spark, dir)
-      val survivors = base.filter(!col("vec_id").isin(delIds: _*))
-      val viaDelete = loaded.assigned.select("nbr_id", "cell")
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      val fresh = Similarity.assignCells(
-          survivors.select(col("vec_id").as("nbr_id"), col("embedding").as("nbr_v")),
-          built.centroids)
-        .select("nbr_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      assert(viaDelete == fresh)
-      // and the deleted rows are unfindable: exact-mode search over the
-      // index equals brute force over the survivors
-      val queries = emb.filter(col("vec_id") < 4)
-      val viaIndex = Similarity.searchIvf(loaded, queries, k = 5, nProbe = 8)
-        .select("query_id", "rank", "nbr_id").collect().map(_.toSeq).toSet
-      val brute = Similarity.bruteForceTopK(survivors, queries, k = 5)
-        .select("query_id", "rank", "nbr_id").collect().map(_.toSeq).toSet
-      assert(viaIndex == brute)
-      // deleting ids nobody has is a no-op
-      val snap = filesPerCell
-      Similarity.deleteFromIvf(spark, dir, Seq(999999L).toDF("vec_id"))
-      assert(filesPerCell == snap)
-    } finally built.assigned.unpersist()
   }
 
   test("appendIvf assigns with frozen centroids; only the batch's cells gain files") {
@@ -534,33 +486,6 @@ class SimilaritySpec extends SparkSpec {
     } finally built.assigned.unpersist()
   }
 
-  test("compaction rewrites an appended layout to one file per cell, rows unchanged") {
-    val emb = Tables.embeddings(spark, sf)
-    val built = Similarity.buildIvf(emb.filter(col("vec_id") < 400), nLists = 8, seed = 42L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_c").toString
-    try {
-      Similarity.saveIvf(built, dir)
-      Similarity.appendIvf(built, emb.filter(col("vec_id") >= 400 && col("vec_id") < 430), dir)
-      Similarity.appendIvf(built, emb.filter(col("vec_id") >= 430 && col("vec_id") < 460), dir)
-      def parquetsPerCell: Map[String, Int] =
-        new java.io.File(s"$dir/assigned").listFiles()
-          .filter(_.getName.startsWith("cell=")).map { d =>
-            d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))
-          }.toMap
-      val before = Similarity.loadIvf(spark, dir).assigned
-        .select("nbr_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      assert(parquetsPerCell.values.exists(_ > 1), "appends should fragment cells")
-      Similarity.compactIvf(spark, dir)
-      assert(parquetsPerCell.values.forall(_ == 1), s"not compacted: $parquetsPerCell")
-      val after = Similarity.loadIvf(spark, dir).assigned
-        .select("nbr_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      assert(after == before)
-    } finally {
-      built.assigned.unpersist()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
   test("quantized index rides save/load/append in its codes shape") {
     val emb = Tables.embeddings(spark, sf)
     val base = emb.filter(col("vec_id") < 450)
@@ -640,25 +565,6 @@ class SimilaritySpec extends SparkSpec {
       val b = brute.select("query_id", "nbr_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(a == b)
-    } finally index.assigned.unpersist()
-  }
-
-  test("ivfRecallReport: recall monotone in nProbe, exactly 1.0 at full probe") {
-    import graft.operators.Similarity
-    val emb = Tables.embeddings(spark, sf)
-    val queries = emb.filter(col("vec_id") < 8)
-    val index = Similarity.buildIvf(emb, nLists = 8)
-    try {
-      val rows = Similarity.ivfRecallReport(index, emb, queries,
-          k = 10, nProbes = Seq(1, 2, 4, 8))
-        .orderBy("n_probe").collect()
-      assert(rows.map(_.getAs[Int]("n_probe")).toSeq == Seq(1, 2, 4, 8))
-      val recalls = rows.map(_.getAs[Double]("mean_recall")).toSeq
-      assert(recalls == recalls.sorted, s"recall must be monotone: $recalls")
-      assert(recalls.last == 1.0, s"full probe must be exact: $recalls")
-      assert(rows.last.getAs[Double]("mean_mrr") == 1.0 &&
-        rows.last.getAs[Double]("mean_ndcg") == 1.0)
-      assert(rows.forall(_.getAs[Long]("n_queries") == 8L))
     } finally index.assigned.unpersist()
   }
 
@@ -1020,14 +926,6 @@ class SimilaritySpec extends SparkSpec {
     val plain = Multimodal.fakeDecodeFeatures(media.drop("__graft_bytes_0"))
     assert(out.select("media_id", "features").collect().toSeq ==
       plain.select("media_id", "features").collect().toSeq)
-  }
-
-  test("resize stub records target dims in metadata, payload untouched") {
-    val media = Multimodal.fromText(
-      Tables.documents(spark, sf).limit(3), "doc_id", "text", "source")
-    val resized = Multimodal.fakeResize(media, 224, 224)
-    val r = resized.select("meta.target_w", "meta.target_h", "meta.byte_len").head()
-    assert(r.getInt(0) == 224 && r.getInt(1) == 224 && r.getLong(2) > 0)
   }
 
   test("resizePpmImage: exact box means, half-up rounding, uneven boxes, clamps") {
@@ -2389,11 +2287,10 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("two-level IVF rides save/load/append; flat loadIvf still reads the dir") {
+  test("two-level IVF rides save/load; flat loadIvf still reads the dir") {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 4)
     val base = emb.filter(col("vec_id") % 20 =!= 0)
-    val batch = emb.filter(col("vec_id") % 20 === 0)
     val i2 = Similarity.buildIvf2(base, nParents = 3, fanout = 3, seed = 7L)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf2").toString
     try {
@@ -2415,20 +2312,6 @@ class SimilaritySpec extends SparkSpec {
         .select("query_id", "nbr_id").orderBy("query_id", "nbr_id")
         .collect().toSeq
       assert(fullFlat == bruteBase)
-      // append lands the batch under the frozen two-level quantizer and
-      // search sees it: full-probe search over the dir == brute force
-      // over the UNION corpus
-      Similarity.appendIvf2(loaded, batch, dir)
-      spark.catalog.refreshByPath(s"$dir/assigned")
-      val after = Similarity.loadIvf2(spark, dir)
-      val fullAfter = Similarity.searchIvf2(after, queries, k = 5,
-          nProbe = 9, probeParents = 3)
-        .select("query_id", "nbr_id").orderBy("query_id", "nbr_id")
-        .collect().toSeq
-      val bruteAll = Similarity.bruteForceTopK(emb, queries, k = 5)
-        .select("query_id", "nbr_id").orderBy("query_id", "nbr_id")
-        .collect().toSeq
-      assert(fullAfter == bruteAll)
       // flat retrain on a two-level dir must fail fast — rebuilding flat
       // centroids would orphan the coarse table and loadIvf2 would
       // descend a stale hierarchy (silent row loss, not an error)
@@ -2436,20 +2319,6 @@ class SimilaritySpec extends SparkSpec {
         Similarity.retrainIvf(spark, dir, nLists = 4, seed = 11L)
       }
       assert(e.getMessage.contains("two-level"))
-      // the two-level retrain swaps all three parts in together: a fresh
-      // (2 x 4)-leaf hierarchy over the SAME stored rows, exhaustive
-      // probe still the brute-force result, no staging residue left
-      Similarity.retrainIvf2(spark, dir, nParents = 2, fanout = 4,
-        seed = 13L)
-      val re = Similarity.loadIvf2(spark, dir)
-      assert(re.fanout == 4 &&
-        re.coarse.select("parent").distinct().count() == 2)
-      val fullRe = Similarity.searchIvf2(re, queries, k = 5,
-          nProbe = 8, probeParents = 2)
-        .select("query_id", "nbr_id").orderBy("query_id", "nbr_id")
-        .collect().toSeq
-      assert(fullRe == bruteAll)
-      assert(!new java.io.File(s"$dir/__retraining2").exists())
     } finally {
       i2.index.assigned.unpersist()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
@@ -2457,37 +2326,11 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("retrainIvf2 upgrades a flat index dir to two-level in place") {
-    val emb = Tables.embeddings(spark, sf)
-    val queries = emb.filter(col("vec_id") < 4)
-    val flat = Similarity.buildIvf(emb, nLists = 4, seed = 5L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_up").toString
-    try {
-      Similarity.saveIvf(flat, dir)
-      Similarity.retrainIvf2(spark, dir, nParents = 2, fanout = 3, seed = 9L)
-      val i2 = Similarity.loadIvf2(spark, dir)
-      assert(i2.fanout == 3)
-      val full = Similarity.searchIvf2(i2, queries, k = 5,
-          nProbe = 6, probeParents = 2)
-        .select("query_id", "nbr_id").orderBy("query_id", "nbr_id")
-        .collect().toSeq
-      val brute = Similarity.bruteForceTopK(emb, queries, k = 5)
-        .select("query_id", "nbr_id").orderBy("query_id", "nbr_id")
-        .collect().toSeq
-      assert(full.nonEmpty && full == brute)
-    } finally {
-      flat.assigned.unpersist()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("IVF2+PQ: composed lifecycle — encode, persist, append frozen, and the byte ladder") {
+  test("IVF2+PQ: composed lifecycle — encode, persist, and the byte ladder") {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 4)
     val base = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    val pq = Similarity.trainPq(base, m = 16, nCodes = 32, seed = 11L)
+    val pq = PqTraining.trainPq(base, m = 16, nCodes = 32, seed = 11L)
     val i2 = Similarity.buildIvf2(base, nParents = 2, fanout = 3, seed = 42L)
     val coded = Similarity.encodePq2(i2, pq)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf2_pq").toString
@@ -2519,23 +2362,6 @@ class SimilaritySpec extends SparkSpec {
           nProbe = 6)
         .orderBy("query_id", "rank").collect()
       assert(h.toSeq == f.toSeq)
-      // frozen-model append: load-after-append == fresh encode of the
-      // union under the SAME hierarchical quantizer + codebooks
-      Similarity.appendIvf2Pq(coded, pq, batch, dir)
-      spark.catalog.refreshByPath(s"$dir/assigned")
-      val after = Similarity.loadIvf2(spark, dir).index.assigned
-        .select("nbr_id", "pq_codes", "cell").collect()
-        .map(r => (r.getLong(0), r.getSeq[Byte](1).toSeq,
-          r.getAs[Number]("cell").longValue)).toSet
-      val freshUnion = Similarity.encodePq(
-          Similarity.IvfIndex(Similarity.assignCells2(
-            graft.core.Parallelism.fanOut(emb.select(col("vec_id").as("nbr_id"),
-              col("embedding").as("nbr_v"))), i2.coarse, i2.index.centroids),
-            i2.index.centroids), pq)
-        .assigned.select("nbr_id", "pq_codes", "cell").collect()
-        .map(r => (r.getLong(0), r.getSeq[Byte](1).toSeq,
-          r.getAs[Number]("cell").longValue)).toSet
-      assert(after == freshUnion, "append diverged from fresh union encode")
       // the byte ladder on the TWO-LEVEL layout: pq < i8 < raw over the
       // same rows, same one-file layout
       val cmpDir = java.nio.file.Files.createTempDirectory("graft_cmp2").toString
@@ -2560,46 +2386,10 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("IVF2 filtered search matches the flat path; two-axis recall report hits 1.0 exhaustive") {
-    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 300)
-    val queries = emb.filter(col("vec_id") < 4)
-    val i2 = Similarity.buildIvf2(emb, nParents = 2, fanout = 3, seed = 42L)
-    val attrs = emb.select(col("vec_id"), (col("vec_id") % 2 === 0).as("keep"))
-    try {
-      // exhaustive hierarchical probe ≡ exhaustive FLAT filtered search
-      // over the inner index — the descent only picks cells
-      val h = Similarity.searchIvf2Filtered(i2, attrs, queries, k = 5,
-          nProbe = 6, pred = col("keep"), probeParents = 2)
-        .orderBy("query_id", "rank").collect()
-      val f = Similarity.searchIvfFiltered(i2.index, attrs, queries, k = 5,
-          nProbe = 6, pred = col("keep"))
-        .orderBy("query_id", "rank").collect()
-      assert(h.nonEmpty && h.toSeq == f.toSeq)
-      // the predicate is respected: only even ids can rank
-      assert(h.forall(_.getLong(1) % 2 == 0))
-      // two-axis tuning report: nested budgets (same parents, more leaves)
-      // are monotone, the exhaustive pair is exactly 1.0
-      val scope = graft.core.CacheScope.handle()
-      val rep = Similarity.ivf2RecallReport(i2, emb, queries, k = 5,
-          budgets = Seq((1, 2), (2, 3), (2, 6)), scope = scope)
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getAs[Double]("mean_recall"))
-        .toMap
-      scope.release()
-      assert(rep((2, 6)) == 1.0, s"exhaustive budget must recover exact: $rep")
-      assert(rep((2, 3)) <= rep((2, 6)) + 1e-12,
-        s"nested leaf budgets must be monotone: $rep")
-      assert(rep.values.forall(r => r >= 0.0 && r <= 1.0))
-    } finally {
-      i2.index.assigned.unpersist()
-      spark.catalog.clearCache()
-    }
-  }
-
   test("retrain re-cells a PQ-coded index on its reconstructions, codes byte-exact") {
     val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 300)
     val queries = emb.filter(col("vec_id") < 4)
-    val pq = Similarity.trainPq(emb, m = 16, nCodes = 32, seed = 11L)
+    val pq = PqTraining.trainPq(emb, m = 16, nCodes = 32, seed = 11L)
     def codesOf(assigned: org.apache.spark.sql.DataFrame) =
       assigned.select("nbr_id", "pq_codes").collect()
         .map(r => r.getLong(0) -> r.getSeq[Byte](1).toSeq).toMap
@@ -2607,7 +2397,6 @@ class SimilaritySpec extends SparkSpec {
     //      probe results are IDENTICAL before and after (cells cannot
     //      matter at full probe; scores come from the same codes)
     val flatDir = java.nio.file.Files.createTempDirectory("graft_pq_rt").toString
-    val twoDir = java.nio.file.Files.createTempDirectory("graft_pq_rt2").toString
     val bareDir = java.nio.file.Files.createTempDirectory("graft_pq_rt3").toString
     try {
       val flat = Similarity.buildIvf(emb, nLists = 4, seed = 42L)
@@ -2628,24 +2417,6 @@ class SimilaritySpec extends SparkSpec {
           Similarity.loadPq(spark, flatDir), queries, k = 5, nProbe = 8)
         .orderBy("query_id", "rank").collect().toSeq
       assert(before.nonEmpty && after == before)
-      // ---- two-level: same contract through retrainIvf2
-      val i2 = Similarity.buildIvf2(emb, nParents = 2, fanout = 2, seed = 3L)
-      Similarity.saveIvf2(Similarity.encodePq2(i2, pq), twoDir)
-      Similarity.savePq(pq, twoDir)
-      i2.index.assigned.unpersist()
-      val b2 = Similarity.searchIvf2Pq(Similarity.loadIvf2(spark, twoDir),
-          Similarity.loadPq(spark, twoDir), queries, k = 5, nProbe = 4,
-          probeParents = 2)
-        .orderBy("query_id", "rank").collect().toSeq
-      Similarity.retrainIvf2(spark, twoDir, nParents = 2, fanout = 3,
-        seed = 9L)
-      val re2 = Similarity.loadIvf2(spark, twoDir)
-      assert(re2.fanout == 3)
-      assert(codesOf(re2.index.assigned) == codesBefore)
-      val a2 = Similarity.searchIvf2Pq(re2, Similarity.loadPq(spark, twoDir),
-          queries, k = 5, nProbe = 6, probeParents = 2)
-        .orderBy("query_id", "rank").collect().toSeq
-      assert(a2 == b2)
       // ---- a PQ layout without its codebooks cannot retrain — fail fast,
       //      never train on garbage
       val bare = Similarity.buildIvf(emb, nLists = 2, seed = 5L)
@@ -2656,7 +2427,7 @@ class SimilaritySpec extends SparkSpec {
       }
       assert(e.getMessage.contains("savePq"))
     } finally {
-      Seq(flatDir, twoDir, bareDir).foreach(d =>
+      Seq(flatDir, bareDir).foreach(d =>
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
       spark.catalog.clearCache()
     }
@@ -2665,14 +2436,10 @@ class SimilaritySpec extends SparkSpec {
   test("retrain fails fast on a stale crash-leftover temp root and on a false rename") {
     val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 100)
     val flatDir = java.nio.file.Files.createTempDirectory("graft_stale_f").toString
-    val twoDir = java.nio.file.Files.createTempDirectory("graft_stale_2").toString
     try {
       val flat = Similarity.buildIvf(emb, nLists = 2, seed = 3L)
       Similarity.saveIvf(flat, flatDir)
       flat.assigned.unpersist()
-      val i2 = Similarity.buildIvf2(emb, nParents = 2, fanout = 2, seed = 3L)
-      Similarity.saveIvf2(i2, twoDir)
-      i2.index.assigned.unpersist()
       // a surviving temp root is RECOVERY MATERIAL: retraining over it
       // would rename into it and then delete it — fail fast instead
       assert(new java.io.File(s"$flatDir/__retraining").mkdirs())
@@ -2680,41 +2447,17 @@ class SimilaritySpec extends SparkSpec {
         Similarity.retrainIvf(spark, flatDir, nLists = 2, seed = 4L)
       }
       assert(e1.getMessage.contains("__retraining"))
-      assert(new java.io.File(s"$twoDir/__retraining2").mkdirs())
-      val e2 = intercept[IllegalArgumentException] {
-        Similarity.retrainIvf2(spark, twoDir, nParents = 2, fanout = 2,
-          seed = 4L)
-      }
-      assert(e2.getMessage.contains("__retraining2"))
-      // after clearing the leftover, retrain proceeds and converges to the
-      // brute-force result at full probe — the guard only blocks the
-      // genuinely unsafe state
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$twoDir/__retraining2"))
-      Similarity.retrainIvf2(spark, twoDir, nParents = 2, fanout = 2,
-        seed = 4L)
-      val re = Similarity.loadIvf2(spark, twoDir)
-      val full = Similarity.searchIvf2(re, emb.filter(col("vec_id") < 3),
-          k = 3, nProbe = 4, probeParents = 2)
-        .select("query_id", "nbr_id").orderBy("query_id", "nbr_id")
-        .collect().toSeq
-      val brute = Similarity.bruteForceTopK(emb,
-          emb.filter(col("vec_id") < 3), k = 3)
-        .select("query_id", "nbr_id").orderBy("query_id", "nbr_id")
-        .collect().toSeq
-      assert(full == brute)
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(flatDir))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(twoDir))
       spark.catalog.clearCache()
     }
   }
 
-  test("PQ-filtered search: true pre-filter top-k over reconstructions; two-level descent matches flat") {
+  test("PQ-filtered search: true pre-filter top-k over reconstructions") {
     val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 300)
     val queries = emb.filter(col("vec_id") < 4)
     val attrs = emb.select(col("vec_id"), (col("vec_id") % 2 === 0).as("keep"))
-    val pq = Similarity.trainPq(emb, m = 16, nCodes = 32, seed = 11L)
+    val pq = PqTraining.trainPq(emb, m = 16, nCodes = 32, seed = 11L)
     val i2 = Similarity.buildIvf2(emb, nParents = 2, fanout = 3, seed = 42L)
     val coded = Similarity.encodePq2(i2, pq)
     def tup(rows: Array[org.apache.spark.sql.Row]) =
@@ -2748,12 +2491,6 @@ class SimilaritySpec extends SparkSpec {
         k = 5, nProbe = 6).collect()
       assert(plain.exists(_.getLong(1) % 2 == 1),
         "fixture too easy: plain top-k already all-eligible")
-      // two-level exhaustive descent is row-identical to the flat path —
-      // the hierarchy only picks cells
-      val h = Similarity.searchIvf2PqFiltered(coded, pq, attrs, queries,
-          k = 5, nProbe = 6, pred = col("keep"), probeParents = 2)
-        .orderBy("query_id", "rank").collect()
-      assert(tup(h) == tup(got))
     } finally {
       i2.index.assigned.unpersist()
       spark.catalog.clearCache()
@@ -2806,61 +2543,4 @@ class SimilaritySpec extends SparkSpec {
 
   private def Ivf2IndexQuantized(i2: Similarity.Ivf2Index): Similarity.Ivf2Index =
     Similarity.Ivf2Index(Similarity.quantizeIvf(i2.index), i2.coarse, i2.fanout)
-
-  test("deleteFromIvf and compactIvf compose with the two-level layout unchanged") {
-    // both ops touch ONLY dir/assigned — the leaf half the IVF2 layout
-    // shares with the flat contract — so they must work on an IVF2 dir
-    // with the coarse table riding along untouched. This pins the
-    // composition (the lifecycle matrix row), not new machinery.
-    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 300)
-    val queries = emb.filter(col("vec_id") < 4)
-    val i2 = Similarity.buildIvf2(emb, nParents = 2, fanout = 3, seed = 42L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf2_dc").toString
-    try {
-      Similarity.saveIvf2(i2, dir)
-      // victims: ids that actually rank in some query's exhaustive top-3
-      // (so forgetting them is observable), never a query id
-      val victims = Similarity.searchIvf2(Similarity.loadIvf2(spark, dir),
-          queries, k = 3, nProbe = 6, probeParents = 2)
-        .filter(col("nbr_id") >= 4)
-        .select("nbr_id").distinct().orderBy("nbr_id").limit(4)
-        .collect().map(_.getLong(0))
-      assert(victims.nonEmpty)
-      val coarseBefore = spark.read.parquet(s"$dir/coarse")
-        .collect().map(_.toSeq).toSet
-      val s2 = spark
-      import s2.implicits._
-      Similarity.deleteFromIvf(spark, dir, victims.toSeq.toDF("vec_id"))
-      val reloaded = Similarity.loadIvf2(spark, dir)
-      assert(reloaded.fanout == i2.fanout)
-      assert(spark.read.parquet(s"$dir/coarse").collect().map(_.toSeq).toSet
-        == coarseBefore, "delete must not touch the coarse half")
-      // exhaustive hierarchical search over the dir == brute force over
-      // the survivors: rows forgotten, top-k still full
-      val survivors = emb.filter(!col("vec_id").isin(victims.toSeq: _*))
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select("query_id", "rank", "nbr_id").collect().map(_.toSeq).toSet
-      val afterDelete = rows(Similarity.searchIvf2(reloaded, queries,
-        k = 5, nProbe = 6, probeParents = 2))
-      assert(afterDelete == rows(Similarity.bruteForceTopK(survivors, queries, k = 5)))
-      // compaction on the same dir: one file per surviving cell, rows and
-      // search results unchanged, coarse still untouched
-      Similarity.compactIvf(spark, dir)
-      val perCell = new java.io.File(s"$dir/assigned").listFiles()
-        .filter(_.getName.startsWith("cell=")).map(d =>
-          d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-      assert(perCell.nonEmpty && perCell.values.forall(_ == 1),
-        s"compaction should leave one file per cell: $perCell")
-      val afterCompact = rows(Similarity.searchIvf2(
-        Similarity.loadIvf2(spark, dir), queries, k = 5, nProbe = 6,
-        probeParents = 2))
-      assert(afterCompact == afterDelete)
-      assert(spark.read.parquet(s"$dir/coarse").collect().map(_.toSeq).toSet
-        == coarseBefore)
-    } finally {
-      i2.index.assigned.unpersist()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      spark.catalog.clearCache()
-    }
-  }
 }

@@ -45,32 +45,10 @@ class SinksSpec extends SparkSpec {
 
     val csvPath = s"$dir/daily_csv"
     WeatherSources.writeCsvCompat(daily, csvPath)
-    val csv = WeatherSources.readCsv(spark, csvPath, Seq("date"))
-    assert(csv.count() == 2)
-    assert(csv.schema("date").dataType.typeName == "timestamp")
+    val csv = spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(csvPath)
+    assert(csv.count() == 2 && csv.columns.toSeq == daily.columns.toSeq)
     assert(csv.select(sum("total_rain")).as[Double].head() == 2.5)
-  }
-
-  test("compacting write collapses a many-partition frame to sized files") {
-    val dir = tmpDir("compact").toString
-    val df = spark.range(10000).toDF("id").repartition(32)
-    WeatherSources.writeCompacted(df, s"$dir/out.parquet",
-      targetFileBytes = 1L << 30) // tiny data, 1 GiB target -> 1 file
-    val files = new java.io.File(s"$dir/out.parquet")
-      .list().count(_.endsWith(".parquet"))
-    assert(files == 1, s"expected 1 compacted file, got $files")
-    assert(spark.read.parquet(s"$dir/out.parquet").count() == 10000)
-  }
-
-  test("compaction file-count clamps and treats the no-stats sentinel as unknown") {
-    val unknown = BigInt(Long.MaxValue)
-    val target = 128L << 20
-    // no-stats sentinel (defaultSizeInBytes = Long.MaxValue): don't coalesce(0)
-    assert(WeatherSources.targetFileCount(unknown, target, unknown).isEmpty)
-    assert(WeatherSources.targetFileCount(unknown - 1, target, unknown, maxFiles = 500)
-      .contains(500)) // huge-but-known estimate clamps to maxFiles, no Int overflow
-    assert(WeatherSources.targetFileCount(BigInt(0), target, unknown).contains(1))
-    assert(WeatherSources.targetFileCount(BigInt(300L << 20), target, unknown).contains(3))
   }
 
   test("S9: city-partitioned processed zone prunes to one directory per city") {
@@ -124,7 +102,7 @@ class SinksSpec extends SparkSpec {
     // full round trip including the partition-recovered shard column
     assert(back.select("doc_id", "text", "source").collect().toSet ==
       docs.collect().toSet)
-    val v = Export.validateShards(back, manifest)
+    val v = Export.validateShardsBytes(spark, out, docs.schema, manifest, "doc_id")
     assert(v.collect().forall(_.getAs[Boolean]("ok")))
     // simulate delivery loss: a copy of the export with one line dropped
     // from one shard (fresh directory — no stale file-status cache)
@@ -145,8 +123,7 @@ class SinksSpec extends SparkSpec {
             new java.io.File(dst, part.getName).toPath, kept)
         }
       }
-    val v2 = Export.validateShards(
-        Export.readJsonlSharded(spark, out2, docs.schema), manifest)
+    val v2 = Export.validateShardsBytes(spark, out2, docs.schema, manifest, "doc_id")
       .collect().map(r => r.getAs[Long]("shard") -> r.getAs[Boolean]("ok")).toMap
     assert(badShard >= 0 && !v2(badShard) && v2.count(!_._2) == 1,
       s"exactly the tampered shard ($badShard) must fail: $v2")
@@ -189,13 +166,12 @@ class SinksSpec extends SparkSpec {
     spark.catalog.refreshByPath(out)
     val shardA = dirs(0).getName.stripPrefix("shard=").toLong
     val shardB = dirs(1).getName.stripPrefix("shard=").toLong
-    // row-count-only validation is blind to both
-    val weak = Export.validateShards(
-      Export.readJsonlSharded(spark, out, docs.schema), manifest)
-    assert(weak.collect().forall(_.getAs[Boolean]("ok")),
-      "row counts must NOT catch same-line-count corruption (that's the hole)")
     val v = Export.validateShardsBytes(spark, out, docs.schema, manifest, "doc_id")
       .collect().map(r => r.getAs[Long]("shard") -> r).toMap
+    // row counts alone are blind to both
+    assert(v.values.forall(r =>
+      r.getAs[Long]("expected_rows") == r.getAs[Long]("actual_rows")),
+      "row counts must NOT catch same-line-count corruption (that's the hole)")
     assert(!v(shardA).getAs[Boolean]("ok") && v(shardA).getAs[Long]("n_bad") == 1L)
     assert(v(shardA).getAs[Long]("expected_bytes") ==
       v(shardA).getAs[Long]("actual_bytes"), "in-place corruption keeps bytes")

@@ -99,19 +99,19 @@ class SourcesSpec extends SparkSpec {
       // non-2xx flows through the SAME retry loop as transport errors:
       // two 503s then success, with the 0.8 s x1.6 schedule (sleep stubbed)
       var delays = Vector.empty[Long]
-      val ok = Ingest.fetchJson(f, s"$base/flaky", sleep = d => delays :+= d)
+      val ok = Ingest.retry(sleep = d => delays :+= d)(_ => f.get(s"$base/flaky"))
       assert(ok == """{"ok":true}""" && flakyCalls == 3)
       assert(delays == Vector(800L, 1280L))
       // exhaustion wraps the last HttpStatusError in NetworkError
       val err = intercept[Ingest.NetworkError] {
-        Ingest.fetchJson(f, s"$base/down", sleep = _ => ())
+        Ingest.retry(sleep = _ => ())(_ => f.get(s"$base/down"))
       }
       assert(err.getCause.isInstanceOf[Ingest.HttpStatusError] &&
         err.getCause.asInstanceOf[Ingest.HttpStatusError].status == 500)
       // transport-level failure (nothing listening) also becomes NetworkError
       server.stop(0)
       val dead = intercept[Ingest.NetworkError] {
-        Ingest.fetchJson(f, s"$base/ok", sleep = _ => ())
+        Ingest.retry(sleep = _ => ())(_ => f.get(s"$base/ok"))
       }
       assert(dead.getCause.isInstanceOf[java.io.IOException])
     } finally server.stop(0)

@@ -1,176 +1,14 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingOps
 
-/** Structured Streaming formulations: watermark + tumbling-day rollup and
-  * stateful sessionization, driven through MemoryStream micro-batches. */
+/** The live ingest pipeline, and the batch operators that run on a stream
+  * unmodified, driven through MemoryStream micro-batches. */
 class StreamingSpec extends SparkSpec {
-
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  test("streaming daily rollup aggregates per city-day with watermark") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[(String, Timestamp, Double, Double, Double, Double)]
-    val hourly = mem.toDF().toDF("city", "time", "temp", "rain", "pm25", "pm10")
-    val rollup = StreamingOps.dailyRollup(hourly, watermark = "1 day")
-    val q = rollup.writeStream.format("memory").queryName("daily_rollup")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        ("bdg", ts("2025-01-01 00:00:00"), 25.0, 0.0, 10.0, 20.0),
-        ("bdg", ts("2025-01-01 06:00:00"), 27.0, 1.5, 14.0, 22.0))
-      q.processAllAvailable()
-      // advance the watermark far past Jan 1 so its window finalizes
-      mem.addData(("bdg", ts("2025-01-05 00:00:00"), 20.0, 0.0, 5.0, 5.0))
-      q.processAllAvailable()
-      mem.addData(("bdg", ts("2025-01-09 00:00:00"), 21.0, 0.0, 6.0, 6.0))
-      q.processAllAvailable()
-      val rows = s.sql(
-        "SELECT * FROM daily_rollup WHERE date = DATE'2025-01-01'").collect()
-      assert(rows.length == 1)
-      val r = rows(0)
-      assert(r.getAs[Double]("temp_min") == 25.0)
-      assert(r.getAs[Double]("temp_max") == 27.0)
-      assert(r.getAs[Double]("total_rain") == 1.5)
-      assert(r.getAs[Double]("pm25_avg") == 12.0)
-    } finally q.stop()
-  }
-
-  test("streaming current-conditions keeps the latest row per city (T4)") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[(String, Timestamp, Double, Double, Double, Double)]
-    val hourly = mem.toDF().toDF("city", "time", "temp", "rain", "pm25", "pm10")
-    val q = StreamingOps.currentConditions(hourly)
-      .writeStream.format("memory").queryName("current")
-      .outputMode(OutputMode.Complete()).start()
-    try {
-      mem.addData(
-        ("bdg", ts("2025-01-01 00:00:00"), 25.0, 0.0, 10.0, 20.0),
-        ("jkt", ts("2025-01-01 01:00:00"), 30.0, 0.0, 50.0, 70.0))
-      q.processAllAvailable()
-      mem.addData(("bdg", ts("2025-01-01 02:00:00"), 26.5, 0.2, 12.0, 22.0))
-      q.processAllAvailable()
-      val rows = s.sql("SELECT * FROM current ORDER BY city").collect()
-      assert(rows.length == 2)
-      assert(rows(0).getAs[Double]("temp") == 26.5) // bdg advanced to the 02:00 row
-      assert(rows(1).getAs[Double]("temp") == 30.0)
-    } finally q.stop()
-  }
-
-  test("stateful sessionization closes a session on the event gap") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[StreamingOps.Event]
-    val sessions = StreamingOps.sessionize(mem.toDS(), gapMs = 60 * 1000L,
-      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())
-    val q = sessions.writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        StreamingOps.Event(1L, ts("2025-01-01 00:00:00"), 1.0),
-        StreamingOps.Event(1L, ts("2025-01-01 00:00:30"), 2.0))
-      q.processAllAvailable()
-      // a later batch beyond the gap closes the first session immediately
-      mem.addData(StreamingOps.Event(1L, ts("2025-01-01 01:00:00"), 5.0))
-      q.processAllAvailable()
-      val rows = s.sql("SELECT * FROM sessions").collect()
-      assert(rows.length == 1)
-      assert(rows(0).getAs[Long]("n_events") == 2L)
-      assert(rows(0).getAs[Double]("value_sum") == 3.0)
-    } finally q.stop()
-  }
-
-  test("streaming exact dedup emits first-seen docs only, across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val deduped = StreamingOps.dedupStream(docs, "ts", "text", watermark = "1 day")
-    val q = deduped.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        (1L, ts("2025-01-01 00:00:00"), "alpha"),
-        (2L, ts("2025-01-01 00:01:00"), "beta"),
-        (3L, ts("2025-01-01 00:02:00"), "alpha")) // in-batch dup
-      q.processAllAvailable()
-      mem.addData((4L, ts("2025-01-01 01:00:00"), "alpha")) // cross-batch dup
-      q.processAllAvailable()
-      mem.addData((5L, ts("2025-01-01 02:00:00"), "gamma"))
-      q.processAllAvailable()
-      val ids = s.sql("SELECT doc_id FROM dedup_stream ORDER BY doc_id")
-        .as[Long].collect().toSeq
-      assert(ids == Seq(1L, 2L, 5L), s"got $ids")
-    } finally q.stop()
-  }
-
-  test("streaming incremental dedup drops corpus matches before the state store") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val corpus = Seq("alpha", "beta").toDF("text")
-      .select(org.apache.spark.sql.functions.md5($"text").as("content_hash"))
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = StreamingOps.dedupStreamIncrement(docs, corpus, "ts", "text")
-      .writeStream.format("memory").queryName("dedup_increment")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        (1L, ts("2025-01-01 00:00:00"), "alpha"),   // corpus match -> dropped
-        (2L, ts("2025-01-01 00:01:00"), "gamma"),   // fresh -> kept
-        (3L, ts("2025-01-01 00:02:00"), "gamma"))   // in-stream dup -> dropped
-      q.processAllAvailable()
-      mem.addData(
-        (4L, ts("2025-01-01 01:00:00"), "beta"),    // corpus match, later batch
-        (5L, ts("2025-01-01 01:01:00"), "gamma"),   // cross-batch stream dup
-        (6L, ts("2025-01-01 01:02:00"), "delta"))   // fresh -> kept
-      q.processAllAvailable()
-      val ids = s.sql("SELECT doc_id FROM dedup_increment ORDER BY doc_id")
-        .as[Long].collect().toSeq
-      assert(ids == Seq(2L, 6L), s"got $ids")
-    } finally q.stop()
-  }
-
-  test("streaming URL dedup: corpus probe before state, canonical variants collapse") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    // stored crawl index holds the canonical form of an already-seen page
-    val corpus = Seq("https://example.com/a").toDF("canonical_url")
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "url")
-    val q = StreamingOps.urlDedupStream(docs, corpus, "ts", "url")
-      .writeStream.format("memory").queryName("url_dedup_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        // corpus match through canonicalization (tracking params + fragment)
-        (1L, ts("2025-01-01 00:00:00"), "HTTPS://example.com:443/a?utm_source=x#f"),
-        (2L, ts("2025-01-01 00:01:00"), "https://example.com/b"),   // fresh
-        (3L, ts("2025-01-01 00:02:00"), "https://example.com/b/"))  // stream dup
-      q.processAllAvailable()
-      mem.addData(
-        (4L, ts("2025-01-01 01:00:00"), "https://example.com/b?fbclid=z"), // cross-batch dup
-        (5L, ts("2025-01-01 01:01:00"), "https://example.com/c?q=1"))      // fresh
-      q.processAllAvailable()
-      val ids = s.sql("SELECT doc_id FROM url_dedup_stream ORDER BY doc_id")
-        .as[Long].collect().toSeq
-      assert(ids == Seq(2L, 5L), s"got $ids")
-    } finally q.stop()
-  }
 
   test("domain stats build as a Complete-mode streaming aggregation, equal to batch") {
     val s = spark
@@ -204,61 +42,6 @@ class StreamingSpec extends SparkSpec {
         Curation.domainVerdicts(rows.toDF("doc_id", "domain", "q")
           .transform(d => Curation.domainStats(d, "domain", col("q"))), 2L, 0.5)
         .orderBy("domain").collect().toSeq)
-    } finally q.stop()
-  }
-
-  test("streaming curation gates quality and language, redacts, splits — stateless append") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = StreamingOps.curateStream(docs)
-      .writeStream.format("memory").queryName("curate_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val good = "the quick brown fox is with the lazy dog and plenty of words " +
-        "to clear the length gate easily contact bob@example.com for details"
-      mem.addData((1L, good), (2L, "hi")) // "hi" fails the length band
-      q.processAllAvailable()
-      // passes quality (0.8) but language-ids as Spanish -> filtered
-      mem.addData((3L, "el perro y la casa de que el parque y la calle de que el sol y la luna"))
-      q.processAllAvailable()
-      val rows = s.sql("SELECT * FROM curate_stream ORDER BY doc_id").collect()
-      assert(rows.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L), s"got ${rows.toSeq}")
-      assert(rows(0).getAs[String]("text").contains("[EMAIL]"))
-      assert(Set("train", "valid", "test").contains(rows(0).getAs[String]("split")))
-    } finally q.stop()
-  }
-
-  test("streaming blocklist screen equals the batch flags row for row") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.Curation
-    val terms = Seq("SPAM", "scam", "spam").toDF("term")
-    val rows = Seq(
-      (1L, "spam spam and more spam"),
-      (2L, "perfectly clean document"),
-      (3L, "one Scam here"))
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = StreamingOps.blocklistStream(docs, "text", terms)
-      .writeStream.format("memory").queryName("blocklist_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(rows.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(2): _*) // split across micro-batches
-      q.processAllAvailable()
-      val cols = Seq("doc_id", "n_tokens", "n_blocked", "blocked_frac", "has_blocked")
-      val streamed = s.sql("SELECT * FROM blocklist_stream")
-        .select(cols.head, cols.tail: _*).orderBy("doc_id").collect().toSeq
-      val batch = Curation.blocklistFlags(rows.toDF("doc_id", "text"),
-          "doc_id", "text", terms)
-        .select(cols.head, cols.tail: _*).orderBy("doc_id").collect().toSeq
-      assert(streamed == batch, s"stream $streamed != batch $batch")
-      assert(streamed.map(_.getAs[Long]("n_blocked")).toSeq == Seq(3L, 0L, 1L))
     } finally q.stop()
   }
 
@@ -323,7 +106,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  // shared fixture for the streaming near-dup tests: a tiny corpus with its
+  // shared fixture for the live ingest test: a tiny corpus with its
   // stored LSH index (bands + token sets), built by the BATCH index builders
   // — the persisted artifacts a deployed ingest pipeline probes
   private val ndK = 16
@@ -342,300 +125,6 @@ class StreamingSpec extends SparkSpec {
     val sets = corpus.select($"doc_id".as("id_corpus"),
       graft.functions.TextFunctions.tokenSet($"text").as("toks_corpus"))
     (bands, sets)
-  }
-  // the stream's documents, also as a static frame for batch-parity checks:
-  // 1 = exact corpus dup, 2 = high-overlap near-dup, 3/5 = fresh,
-  // 4 = identical text to 3 (in-stream signature dup)
-  private val ndDocs = Seq(
-    (1L, ts("2025-01-01 00:00:00"), "alpha beta gamma delta epsilon zeta"),
-    (2L, ts("2025-01-01 00:01:00"), "alpha beta gamma delta epsilon eta"),
-    (3L, ts("2025-01-01 00:02:00"), "totally fresh unrelated content words here"),
-    (4L, ts("2025-01-01 01:00:00"), "totally fresh unrelated content words here"),
-    (5L, ts("2025-01-01 01:01:00"), "another brand new document entirely distinct"))
-
-  test("streaming near-dup matches equal the batch stored-index variant") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.Dedup
-    val (bands, sets) = ndIndex
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = StreamingOps.nearDupStreamMatches(docs, bands, sets,
-        "doc_id", "text", ndK, ndRpb, ndThreshold)
-      .writeStream.format("memory").queryName("neardup_matches")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(ndDocs.take(3): _*)
-      q.processAllAvailable()
-      mem.addData(ndDocs.drop(3): _*)
-      q.processAllAvailable()
-      val streamPairs = s.sql(
-          "SELECT DISTINCT id_new, id_corpus FROM neardup_matches")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val batchPairs = Dedup.minhashLshIncrementIndexed(
-          ndDocs.toDF("doc_id", "ts", "text"), bands, sets,
-          "doc_id", "text", ndK, ndRpb, ndThreshold)
-        .select("id_new", "id_corpus")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(streamPairs == batchPairs,
-        s"stream $streamPairs != batch $batchPairs")
-      // the exact corpus dup must be among them (all bands collide at j=1.0)
-      assert(streamPairs.contains((1L, 100L)))
-    } finally q.stop()
-  }
-
-  test("streaming fuzzy-key matches equal the batch length-band join") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val corpus = Seq((100L, "jakarta"), (101L, "bandung"), (102L, "surabaya"))
-      .toDF("id_corpus", "key_corpus")
-    val arrivals = Seq((1L, "jakartha"), (2L, "bandungg"), (3L, "medan"),
-      (4L, "jkarta"))
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "fkey")
-    val q = StreamingOps.fuzzyKeyStreamMatches(docs, corpus,
-        "doc_id", "fkey", maxDist = 2)
-      .writeStream.format("memory").queryName("fuzzy_matches")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(arrivals.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(arrivals.drop(2): _*)
-      q.processAllAvailable()
-      val streamPairs = s.sql(
-          "SELECT id_new, id_corpus, dist FROM fuzzy_matches")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val batchPairs = graft.operators.FuzzyJoin.join(
-          arrivals.toDF("doc_id", "fkey"), corpus.select(
-            $"id_corpus".as("doc_id"), $"key_corpus".as("fkey")),
-          "doc_id", "fkey", 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getAs[Long]("dist"))).toSet
-      assert(streamPairs == batchPairs,
-        s"stream $streamPairs != batch $batchPairs")
-      // typo arrivals hit their corpus originals; the novel key matches none
-      assert(streamPairs.contains((1L, 100L, 1L)) &&
-        streamPairs.contains((4L, 100L, 1L)))
-      assert(!streamPairs.exists(_._1 == 3L))
-    } finally q.stop()
-  }
-
-  test("streaming semantic decontamination equals the batch flags") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.Decontaminate
-    val bench = Seq((100L, Seq(1.0, 0.0)), (101L, Seq(0.0, 1.0)))
-      .toDF("vec_id", "embedding")
-    val rows = Seq(
-      (1L, ts("2025-01-01 00:00:00"), Seq(1.0, 0.1)),
-      (2L, ts("2025-01-01 00:00:01"), Seq(0.1, 1.0)),
-      (3L, ts("2025-01-01 00:00:02"), Seq(0.7, 0.7)),
-      (4L, ts("2025-01-01 00:00:03"), Seq(-1.0, 0.2)))
-    val mem = MemoryStream[(Long, Timestamp, Seq[Double])]
-    val docs = mem.toDF().toDF("vec_id", "ts", "embedding")
-    val q = StreamingOps.semanticDecontStream(docs, bench,
-        "ts", "vec_id", "embedding", "vec_id", "embedding",
-        threshold = 0.9, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("sem_decont")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(rows.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(2): _*)
-      q.processAllAvailable()
-      // flush: advance the watermark past every doc's window
-      mem.addData((98L, ts("2025-01-03 00:00:00"), Seq(1.0, 0.0)))
-      q.processAllAvailable()
-      mem.addData((99L, ts("2025-01-04 00:00:00"), Seq(1.0, 0.0)))
-      q.processAllAvailable()
-      val stream = s.sql(
-          """SELECT vec_id, nearest_bench_id, round(max_cosine, 9) AS c,
-            |  is_contaminated FROM sem_decont WHERE vec_id < 90""".stripMargin)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getBoolean(3))).toSet
-      val batch = Decontaminate.semanticFlags(
-          rows.toDF("vec_id", "ts", "embedding"), "vec_id", "embedding",
-          bench, "vec_id", "embedding", threshold = 0.9)
-        .select(col("vec_id"), col("nearest_bench_id"),
-          round(col("max_cosine"), 9).as("c"), col("is_contaminated"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getBoolean(3))).toSet
-      assert(stream == batch, s"stream $stream != batch $batch")
-      assert(stream.exists(x => x._1 == 1L && x._4) &&
-        stream.exists(x => x._1 == 4L && !x._4))
-    } finally q.stop()
-  }
-
-  test("IVF-pruned streaming semantic decon: nProbe=nLists equals full scoring; pruning only lowers max_cosine") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.Similarity
-    // benchmark in two well-separated clusters so the 2-cell quantizer
-    // splits them; docs aim at one cluster each
-    val bench = Seq(
-      (100L, Seq(1.0, 0.0)), (101L, Seq(0.9, 0.1)),
-      (102L, Seq(0.0, 1.0)), (103L, Seq(0.1, 0.9)))
-      .toDF("vec_id", "embedding")
-    val index = Similarity.buildIvf(bench, nLists = 2)
-    val rows = Seq(
-      (1L, ts("2025-01-01 00:00:00"), Seq(1.0, 0.05)),
-      (2L, ts("2025-01-01 00:00:01"), Seq(0.05, 1.0)),
-      (3L, ts("2025-01-01 00:00:02"), Seq(0.7, 0.7)),
-      (4L, ts("2025-01-01 00:00:03"), Seq(-1.0, 0.2)))
-    def run(nProbe: Int, qn: String): Set[(Long, Long, Double, Boolean)] = {
-      val mem = MemoryStream[(Long, Timestamp, Seq[Double])]
-      val docs = mem.toDF().toDF("vec_id", "ts", "embedding")
-      val q = StreamingOps.semanticDecontStreamIvf(docs, index,
-          "ts", "vec_id", "embedding", threshold = 0.9, nProbe = nProbe,
-          watermark = "10 minutes")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        mem.addData(rows: _*)
-        q.processAllAvailable()
-        // flush: advance the watermark past every doc's window
-        mem.addData((99L, ts("2025-01-04 00:00:00"), Seq(1.0, 0.0)))
-        q.processAllAvailable()
-        s.sql(s"""SELECT vec_id, nearest_bench_id, round(max_cosine, 9) AS c,
-            |  is_contaminated FROM $qn WHERE vec_id < 90""".stripMargin)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.getBoolean(3))).toSet
-      } finally q.stop()
-    }
-    try {
-      // full-probe stream == unpruned stream twin on closed windows
-      val memF = MemoryStream[(Long, Timestamp, Seq[Double])]
-      val docsF = memF.toDF().toDF("vec_id", "ts", "embedding")
-      val qf = StreamingOps.semanticDecontStream(docsF, bench,
-          "ts", "vec_id", "embedding", "vec_id", "embedding",
-          threshold = 0.9, watermark = "10 minutes")
-        .writeStream.format("memory").queryName("sem_decont_full")
-        .outputMode(OutputMode.Append()).start()
-      val full = try {
-        memF.addData(rows: _*)
-        qf.processAllAvailable()
-        memF.addData((99L, ts("2025-01-04 00:00:00"), Seq(1.0, 0.0)))
-        qf.processAllAvailable()
-        s.sql("""SELECT vec_id, nearest_bench_id, round(max_cosine, 9) AS c,
-            |  is_contaminated FROM sem_decont_full WHERE vec_id < 90""".stripMargin)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.getBoolean(3))).toSet
-      } finally qf.stop()
-      val exhaustive = run(nProbe = 2, qn = "sem_decont_ivf2")
-      assert(exhaustive == full, s"nProbe=nLists $exhaustive != full $full")
-      assert(exhaustive.exists(x => x._1 == 1L && x._4) &&
-        exhaustive.exists(x => x._1 == 4L && !x._4))
-      // pruned: every emitted doc's max_cosine <= the full variant's, and
-      // no doc is flagged that full scoring would clear
-      val pruned = run(nProbe = 1, qn = "sem_decont_ivf1")
-      val fullC = full.map(x => x._1 -> x._3).toMap
-      pruned.foreach { case (id, _, c, flag) =>
-        assert(c <= fullC(id) + 1e-12, s"doc $id pruned cosine $c above full")
-        assert(!flag || full.exists(x => x._1 == id && x._4))
-      }
-    } finally index.assigned.unpersist()
-  }
-
-  test("streaming n-gram collision decontamination equals the batch verdicts") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.Decontaminate
-    val benchSentence = "alpha bravo charlie delta echo foxtrot golf hotel " +
-      "india juliett kilo lima mike" // exactly 13 tokens
-    val bench = Seq((100L, s"context $benchSentence closing"))
-      .toDF("doc_id", "text")
-    val rows = Seq(
-      (1L, ts("2025-01-01 00:00:00"),
-        s"intro words then $benchSentence and a trailing tail here"),
-      (2L, ts("2025-01-01 00:00:01"),
-        "no overlap with the benchmark at all in this document text body " +
-          "that runs well past thirteen tokens to form real shingles"),
-      (3L, ts("2025-01-01 00:00:02"),
-        "alpha bravo charlie delta echo foxtrot golf hotel india juliett " +
-          "kilo lima DIFFERENT so the window never matches anywhere"))
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = StreamingOps.ngramDecontStream(docs, bench,
-        "ts", "doc_id", "text", shingleK = 13, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("ngram_decont")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(rows.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(2): _*)
-      q.processAllAvailable()
-      // flush: advance the watermark past every doc's window
-      mem.addData((98L, ts("2025-01-03 00:00:00"), "late flush doc one"))
-      q.processAllAvailable()
-      mem.addData((99L, ts("2025-01-04 00:00:00"), "late flush doc two"))
-      q.processAllAvailable()
-      val stream = s.sql(
-          """SELECT doc_id, n_shingles, n_collisions, is_contaminated
-            |FROM ngram_decont WHERE doc_id < 90""".stripMargin)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getBoolean(3))).toSet
-      val batch = Decontaminate.ngramCollisions(
-          rows.toDF("doc_id", "ts", "text"), bench, "doc_id", "text",
-          shingleK = 13)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getBoolean(3))).toSet
-      assert(stream == batch, s"stream $stream != batch $batch")
-      assert(stream.exists(x => x._1 == 1L && x._4) &&
-        stream.exists(x => x._1 == 3L && !x._4))
-    } finally q.stop()
-  }
-
-  test("streaming near-dup increment: corpus matches and same-signature stream dups dropped") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.Dedup
-    val (bands, sets) = ndIndex
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = StreamingOps.nearDupStreamIncrement(docs, bands, sets,
-        "ts", "doc_id", "text", ndK, ndRpb, ndThreshold,
-        watermark = "10 minutes")
-      .writeStream.format("memory").queryName("neardup_increment")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(ndDocs.take(3): _*)
-      q.processAllAvailable()
-      mem.addData(ndDocs.drop(3): _*)
-      q.processAllAvailable()
-      // flush: push the watermark far past every doc's window so the
-      // append-mode aggregation finalizes them (the sentinels stay pending)
-      mem.addData((98L, ts("2025-01-03 00:00:00"), "late flush sentinel row"))
-      q.processAllAvailable()
-      mem.addData((99L, ts("2025-01-04 00:00:00"), "later flush sentinel row"))
-      q.processAllAvailable()
-      // sentinel 98's window is itself finalized once 99 advances the
-      // watermark; compare only the scenario docs
-      val streamIds = s.sql("SELECT doc_id FROM neardup_increment")
-        .as[Long].collect().toSet.filter(_ < 90L)
-      // expected survivors from the BATCH formulation on the same rows:
-      // first occurrence per minhash signature, minus stored-index matches
-      val static = ndDocs.toDF("doc_id", "ts", "text")
-      val matched = Dedup.minhashLshIncrementIndexed(static, bands, sets,
-          "doc_id", "text", ndK, ndRpb, ndThreshold)
-        .select("id_new").distinct().as[Long].collect().toSet
-      val firstPerSig = Dedup.withMinhashSigCols(static, $"text", ndK)
-        .select($"doc_id", md5(concat_ws(",",
-          (0 until ndK).map(i => col(s"h$i").cast("string")): _*)).as("sig"))
-        .groupBy("sig").agg(min("doc_id").as("doc_id"))
-        .select("doc_id").as[Long].collect().toSet
-      val expected = firstPerSig -- matched
-      assert(streamIds == expected, s"stream $streamIds != batch $expected")
-      // sanity on the scenario itself: the exact corpus dup (1) and the
-      // in-stream signature dup (4) are dropped, the fresh docs survive
-      assert(!streamIds.contains(1L) && !streamIds.contains(4L))
-      assert(streamIds.contains(3L) && streamIds.contains(5L))
-    } finally q.stop()
   }
 
   test("live ingest pipeline: exact drop, near-dup edges, cluster state, doc append") {
@@ -698,122 +187,6 @@ class StreamingSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateDir))
   }
 
-  test("streaming IVF ingest appends micro-batches under frozen centroids") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.Similarity
-    val emb = graft.core.Tables.embeddings(s, "/root/testdata/sf0.01")
-    val base = emb.filter(col("vec_id") < 400)
-    val built = Similarity.buildIvf(base, nLists = 8, seed = 42L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stream").toString
-    try {
-      Similarity.saveIvf(built, dir)
-      val rows = emb.filter(col("vec_id") >= 400 && col("vec_id") < 440)
-        .select("vec_id", "embedding")
-        .as[(Long, Array[Float])].collect()
-      val mem = MemoryStream[(Long, Array[Float])]
-      val docs = mem.toDF().toDF("vec_id", "embedding")
-      val q = StreamingOps.ivfIngest(docs, built, dir).start()
-      try {
-        mem.addData(rows.take(20).toIndexedSeq: _*)
-        q.processAllAvailable()
-        mem.addData(rows.drop(20).toIndexedSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      // ingested index == a fresh assignment of the union under the same
-      // centroids — streaming delivery changes nothing about the layout
-      val loaded = Similarity.loadIvf(s, dir)
-      val got = loaded.assigned.select("nbr_id", "cell").collect()
-        .map(r => (r.getLong(0), r.getInt(1))).toSet
-      val want = Similarity.assignCells(
-          emb.filter(col("vec_id") < 440)
-            .select(col("vec_id").as("nbr_id"), col("embedding").as("nbr_v")),
-          built.centroids)
-        .select("nbr_id", "cell").collect()
-        .map(r => (r.getLong(0), r.getInt(1))).toSet
-      assert(got == want)
-    } finally {
-      built.assigned.unpersist()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
-  test("streaming link-state ingest: folded log re-rank equals batch PageRank") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.LinkGraph
-    // two crawl waves; wave 2 repeats an edge so the fold must ADD weights
-    val wave1 = Seq(("a", "b"), ("a", "c"), ("b", "c"))
-    val wave2 = Seq(("c", "a"), ("a", "b"), ("d", "a"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_link_stream").toString + "/state"
-    try {
-      val mem = MemoryStream[(String, String)]
-      val edges = mem.toDF().toDF("src", "dst")
-      val q = StreamingOps.linkStateIngest(edges, dir).start()
-      try {
-        mem.addData(wave1: _*)
-        q.processAllAvailable()
-        mem.addData(wave2: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      val ranksStream = LinkGraph.pageRankWeighted(
-          StreamingOps.loadLinkState(s, dir), iters = 3)
-        .orderBy("domain").collect().map(r => (r.getString(0), r.getDouble(1)))
-      val ranksBatch = LinkGraph.pageRank(
-          (wave1 ++ wave2).toDF("src", "dst"), iters = 3)
-        .orderBy("domain").collect().map(r => (r.getString(0), r.getDouble(1)))
-      assert(ranksStream.nonEmpty && ranksStream.sameElements(ranksBatch))
-      // compaction rewrites the log as its fold: state identical, one row
-      // per distinct (src, dst) — the repeated a->b edge proves the ADD
-      val before = StreamingOps.loadLinkState(s, dir).orderBy("src", "dst")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      StreamingOps.compactLinkState(s, dir)
-      val after = StreamingOps.loadLinkState(s, dir).orderBy("src", "dst")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      assert(after == before)
-      assert(after.exists { case (a, b, w) => a == "a" && b == "b" && w == 2L })
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(dir).getParentFile)
-  }
-
-  test("streaming perplexity equals batch scoring once windows close") {
-    import graft.operators.LanguageModel
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val lm = LanguageModel.trainBigramLm(
-      Seq((1L, "a b a b c"), (2L, "a b d")).toDF("doc_id", "text"),
-      "doc_id", "text", vocabCap = 3, bigramCap = 10)
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = StreamingOps.perplexityStream(docs, lm, "doc_id", "ts", "text")
-      .writeStream.format("memory").queryName("ppl_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        (10L, ts("2025-01-01 00:10:00"), "a b z"),
-        (11L, ts("2025-01-01 00:20:00"), "c c"))
-      q.processAllAvailable()
-      // advance the watermark far past the first window to flush it
-      mem.addData((99L, ts("2025-01-01 05:00:00"), "a"))
-      q.processAllAvailable()
-      q.processAllAvailable()
-      val got = s.sql("""SELECT doc_id, n_scored, avg_logp, ppl
-          FROM ppl_stream WHERE doc_id < 99 ORDER BY doc_id""")
-        .collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
-      val want = LanguageModel.perplexity(
-          Seq((10L, "a b z"), (11L, "c c")).toDF("doc_id", "text"),
-          "doc_id", "text", lm)
-        .orderBy("doc_id").collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
-      assert(got == want, s"stream $got != batch $want")
-    } finally q.stop()
-  }
-
   test("robots screening is row-pure: the batch operator runs on a stream unmodified") {
     import graft.operators.Curation
     val s = spark
@@ -836,257 +209,6 @@ class StreamingSpec extends SparkSpec {
       val got = s.sql("SELECT doc_id, robots_blocked FROM robots_stream")
         .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
       assert(got == Map(1L -> true, 2L -> false, 3L -> true, 4L -> false))
-    } finally q.stop()
-  }
-
-  test("streaming Kneser-Ney scoring equals batch once windows close") {
-    import graft.operators.LanguageModel
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val lm = LanguageModel.trainKneserNey(
-      Seq((1L, "a b a b c"), (2L, "a b d")).toDF("doc_id", "text"),
-      "doc_id", "text", vocabCap = 3, bigramCap = 10)
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = StreamingOps.perplexityKnStream(docs, lm, "doc_id", "ts", "text")
-      .writeStream.format("memory").queryName("ppl_kn_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        (10L, ts("2025-01-01 00:10:00"), "a b z"),
-        (11L, ts("2025-01-01 00:20:00"), "c c"))
-      q.processAllAvailable()
-      mem.addData((99L, ts("2025-01-01 05:00:00"), "a"))
-      q.processAllAvailable()
-      q.processAllAvailable()
-      val got = s.sql("""SELECT doc_id, n_scored, avg_logp, ppl
-          FROM ppl_kn_stream WHERE doc_id < 99 ORDER BY doc_id""")
-        .collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
-      val want = LanguageModel.perplexityKneserNey(
-          Seq((10L, "a b z"), (11L, "c c")).toDF("doc_id", "text"),
-          "doc_id", "text", lm)
-        .orderBy("doc_id").collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
-      assert(got == want, s"stream $got != batch $want")
-    } finally q.stop()
-  }
-
-  test("streaming chat intake: scan-stage validation, corpus probe, cross-batch transcript dedup, render == batch") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import StreamingOps.{Conv, Turn}
-    def ua(q: String, a: String) =
-      Seq(Turn(0, "user", q), Turn(1, "assistant", a))
-    // stored corpus already contains the transcript of ("hello", "world")
-    val corpus = Seq("<|user|>\nhello\n<|assistant|>\nworld").toDF("t")
-      .select(org.apache.spark.sql.functions.md5(
-        org.apache.spark.sql.functions.regexp_replace(
-          org.apache.spark.sql.functions.lower(
-            org.apache.spark.sql.functions.trim($"t")), "\\s+", " "))
-        .as("transcript_h"))
-    val mem = MemoryStream[Conv]
-    val q = StreamingOps.chatIngestStream(mem.toDF(), corpus)
-      .writeStream.format("memory").queryName("chat_intake")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        Conv(1L, ts("2025-01-01 00:00:00"), ua("what is spark", "an engine")),
-        Conv(2L, ts("2025-01-01 00:01:00"),
-          Seq(Turn(0, "user", "dangling"), Turn(1, "assistant", "ok"),
-            Turn(2, "user", "bye"))),                   // ends on user -> invalid
-        Conv(3L, ts("2025-01-01 00:02:00"),
-          ua("what is  SPARK", "an engine")))           // same normalized transcript as 1 -> dropped
-      q.processAllAvailable()
-      mem.addData(
-        Conv(4L, ts("2025-01-01 01:00:00"), ua("what is spark", "an engine")), // cross-batch dup
-        Conv(5L, ts("2025-01-01 01:01:00"), ua("hello", "world")),             // corpus match
-        Conv(6L, ts("2025-01-01 01:02:00"),
-          Seq(Turn(1, "assistant", "out of order"), Turn(0, "user", "sorted?"))))
-      q.processAllAvailable()
-      val rows = s.sql("SELECT conv_id, text FROM chat_intake ORDER BY conv_id")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(rows.keySet == Set(1L, 6L), s"got ${rows.keySet}")
-      // out-of-order turn array renders in turn_idx order
-      assert(rows(6L) == "<|user|>\nsorted?\n<|assistant|>\nout of order")
-      // stream render == batch Chat.render on the exploded turns
-      val batchText = graft.operators.Chat.render(
-          Seq((1L, 0, "user", "what is spark"), (1L, 1, "assistant", "an engine"))
-            .toDF("conv_id", "turn_idx", "role", "content"))
-        .collect()(0).getAs[String]("text")
-      assert(rows(1L) == batchText)
-    } finally q.stop()
-  }
-
-  test("streaming phrase screen equals the batch Aho-Corasick flags") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.MultiMatch
-    val pats = Seq("a a", "table table", "zz")
-    val rows = Seq((1L, "a a a table table"), (2L, "clean doc"),
-      (3L, "zz a a zz"))
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = StreamingOps.multiMatchStream(docs, "doc_id", "text", pats)
-      .writeStream.format("memory").queryName("mm_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(rows.take(1): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(1): _*) // split across micro-batches
-      q.processAllAvailable()
-      val cols = Seq("doc_id", "n_hits", "n_patterns", "has_hit")
-      val streamed = s.sql("SELECT * FROM mm_stream")
-        .select(cols.head, cols.tail: _*).orderBy("doc_id").collect().toSeq
-      val batch = MultiMatch.screenFlags(rows.toDF("doc_id", "text"),
-          "doc_id", "text", pats)
-        .select(cols.head, cols.tail: _*).orderBy("doc_id").collect().toSeq
-      assert(streamed == batch, s"stream $streamed != batch $batch")
-      // overlap semantics survive the stream: "a a a" counts "a a" twice
-      assert(streamed.head.getAs[Long]("n_hits") == 3L)
-    } finally q.stop()
-  }
-
-  test("streaming length-state ingest: folded-log quantiles equal batch") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.Diagnostics
-    // wave 2 repeats value 3, so the fold must ADD counts across batches
-    val wave1 = Seq(1L, 2L, 2L, 3L, 3L, 3L).map(v => (v, s"d$v"))
-    val wave2 = Seq(3L, 4L, 4L, 4L).map(v => (v, s"e$v"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_len_stream").toString + "/state"
-    try {
-      val mem = MemoryStream[(Long, String)]
-      val docs = mem.toDF().toDF("n_toks", "text")
-      val q = StreamingOps.lengthStateIngest(docs, col("n_toks"), dir).start()
-      try {
-        mem.addData(wave1: _*)
-        q.processAllAvailable()
-        mem.addData(wave2: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      val qs = Seq(0.5, 0.9, 1.0)
-      val fromState = Diagnostics.exactQuantilesFromCounts(
-        StreamingOps.loadLengthState(s, dir), qs).collect().toSeq
-      val batch = Diagnostics.exactQuantiles(
-        (wave1 ++ wave2).toDF("v", "text"), col("v"), qs).collect().toSeq
-      assert(fromState == batch, s"state $fromState != batch $batch")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(dir).getParentFile)
-  }
-
-  test("streaming logistic scoring equals the batch scorer row for row") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.QualityClassifier
-    val train = Seq((1L, "good solid prose"), (2L, "spam junk spam"),
-      (3L, "good prose again"), (4L, "junk list junk")).toDF("doc_id", "text")
-    val m = QualityClassifier.trainLogistic(train, "doc_id", "text",
-      col("doc_id") % 2 === 1, iters = 2, lr = 0.5, buckets = 4096)
-    // score a DIFFERENT set: unseen tokens, empty text, repeats
-    val rows = Seq((10L, "good good spam"), (11L, ""), (12L, "novel words"),
-      (13L, "solid junk prose list"))
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingOps.logitScoreStream(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text", m)
-      .writeStream.format("memory").queryName("logit_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(rows.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(2): _*)
-      q.processAllAvailable()
-      val cols = Seq("doc_id", "n_tokens", "margin", "p", "keep")
-      val streamed = s.sql("SELECT * FROM logit_stream")
-        .select(cols.head, cols.tail: _*).orderBy("doc_id").collect().toSeq
-      val batch = QualityClassifier.scoreLogistic(
-          rows.toDF("doc_id", "text"), "doc_id", "text", m)
-        .select(cols.head, cols.tail: _*).orderBy("doc_id").collect().toSeq
-      assert(streamed == batch, s"stream $streamed != batch $batch")
-    } finally q.stop()
-  }
-
-  test("streaming lang-id routing equals the batch scorer row for row") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.{LangClassifier, QualityClassifier}
-    val train = Seq((1L, "der hund und die katze", "de"),
-      (2L, "die sonne und der mond", "de"),
-      (3L, "the dog and the cat", "en"),
-      (4L, "the sun and the moon", "en")).toDF("doc_id", "text", "lang")
-    val fold = QualityClassifier.tokenFold(train, "doc_id", "text",
-      buckets = 4096, salt = ":lis")
-    val m = LangClassifier.trainLangNb(fold, train.select("doc_id", "lang"),
-      buckets = 4096, salt = ":lis")
-    // unseen tokens (tie broken to 'de'), empty text, mixed, repeats
-    val rows = Seq((10L, "der hund und the dog"), (11L, ""),
-      (12L, "novel words here"), (13L, "the the the mond"))
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingOps.langIdStream(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text", m)
-      .writeStream.format("memory").queryName("langid_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(rows.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(2): _*)
-      q.processAllAvailable()
-      val cols = Seq("doc_id", "n_tokens", "lang_pred", "score")
-      val streamed = s.sql("SELECT * FROM langid_stream")
-        .select(cols.head, cols.tail: _*).orderBy("doc_id").collect().toSeq
-      val test = rows.toDF("doc_id", "text")
-      val batch = LangClassifier.scoreLang(test, "doc_id",
-          QualityClassifier.tokenFold(test, "doc_id", "text",
-            buckets = 4096, salt = ":lis"), m)
-        .select(cols.head, cols.tail: _*).orderBy("doc_id").collect().toSeq
-      assert(streamed == batch, s"stream $streamed != batch $batch")
-    } finally q.stop()
-  }
-
-  test("streaming unigram segmentation equals the batch Viterbi row for row") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.UnigramLm
-    val train = Seq((1L, "the brown fox ran"), (2L, "the brown owl sat"),
-      (3L, "brown foxes run far"), (4L, "owls sit near the fox"))
-      .toDF("doc_id", "text")
-    val model = UnigramLm.trainUnigram(train, "doc_id", "text",
-      vocabSize = 64, iters = 2, seedCap = 256)
-    // unseen tokens (char/unk fallback), empty text, repeats
-    val rows = Seq((10L, "the brown fox"), (11L, ""),
-      (12L, "zebra quux"), (13L, "fox fox owl"))
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingOps.unigramSegmentStream(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
-      .writeStream.format("memory").queryName("unigram_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(rows.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(2): _*)
-      q.processAllAvailable()
-      def norm(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("doc_id"),
-            expr("transform(words, w -> struct(w.word, w.subtokens))")
-              .cast("string").as("w"))
-          .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val streamed = norm(s.sql("SELECT * FROM unigram_stream"))
-      val batch = norm(UnigramLm.applyUnigram(
-        rows.toDF("doc_id", "text"), "doc_id", "text", model))
-      assert(streamed == batch, s"stream $streamed != batch $batch")
-      // every word reconstructs from its pieces on the stream side too
-      val bad = s.sql("SELECT * FROM unigram_stream")
-        .select(explode(col("words")).as("w"))
-        .filter(concat_ws("", col("w.subtokens")) =!= col("w.word")).count()
-      assert(bad == 0L)
     } finally q.stop()
   }
 }

@@ -72,21 +72,10 @@ class UnigramLmSpec extends SparkSpec {
     assert(multi > 0L, "trained model must emit multi-char pieces")
   }
 
-  test("persisted model segments identically; fertility bake-off vs BPE runs on one report shape") {
+  test("fertility bake-off vs BPE runs on one report shape") {
     val docs = Tables.documents(spark, sf).filter(col("doc_id") < 60)
     val model = UnigramLm.trainUnigram(docs, "doc_id", "text",
       vocabSize = 256, iters = 2, seedCap = 1024)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ug").toString
-    try {
-      UnigramLm.saveModel(model, dir)
-      def counts(m: org.apache.spark.sql.DataFrame) =
-        UnigramLm.applyUnigram(docs, "doc_id", "text", m)
-          .select(col("doc_id"), aggregate(col("words"), lit(0L),
-            (acc, w) => acc + size(w.getField("subtokens"))).as("n"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(counts(model) == counts(UnigramLm.loadModel(spark, dir)))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(dir))
     // the bake-off: one report shape for both tokenizers, same corpus
     val ug = UnigramLm.fertilityByGroup(docs, "doc_id", "text", "source",
       model).collect().map(r => r.getAs[String]("source") ->
